@@ -25,17 +25,20 @@ object ReportFormat {
 
   val BlockTerminatorKey = "status"
 
+  /** Report file extension (case-sensitive), inside directories and zips. */
+  val ReportExt = ".TXT"
+
   /** Read report files under `dir` (recursively, `*.TXT` like the
     * reference's extension filter, Proof.scala:69-83) as one row per file.
     * Executor-side read — the reference materializes whole files on the
     * driver (Q7). `wholetext` keeps per-file line order fully deterministic
     * (report files are KB-scale; one row per file parallelizes per-file).
     */
-  def readReportFiles(spark: SparkSession, dir: String, ext: String = ".TXT"): DataFrame =
+  def readReportFiles(spark: SparkSession, dir: String): DataFrame =
     spark.read
       .option("wholetext", "true")
       .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", s"*$ext")
+      .option("pathGlobFilter", s"*$ReportExt")
       .text(dir)
       // input_file_name() is URI-encoded ('[' → %5B) — decode so filename
       // regexes (e.g. the [dd-MM-yyyyTHH_mm_ss] timestamp) see raw names.
@@ -89,8 +92,8 @@ object ReportFormat {
   }
 
   /** Full text → blocks pipeline over a directory. */
-  def parseDirectory(spark: SparkSession, dir: String, ext: String = ".TXT"): DataFrame =
-    assembleBlocks(toLines(readReportFiles(spark, dir, ext)))
+  def parseDirectory(spark: SparkSession, dir: String): DataFrame =
+    assembleBlocks(toLines(readReportFiles(spark, dir)))
 
   /** Zip-wrapped reports (the ISU shape the reference declares but never
     * implements — Proof.scala:215-224; zip name/dir/path/size fields at
@@ -103,7 +106,7 @@ object ReportFormat {
     * for many-small-archives ingest; entries are materialized per archive,
     * bounded by archive size.
     */
-  def readZippedReports(spark: SparkSession, dir: String, ext: String = ".TXT"): DataFrame = {
+  def readZippedReports(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     spark.sparkContext.binaryFiles(s"$dir/*.zip")
       .flatMap { case (zipPath, pds) =>
@@ -111,7 +114,7 @@ object ReportFormat {
         try {
           Iterator.continually(zis.getNextEntry)
             .takeWhile(_ != null)
-            .filter(e => !e.isDirectory && e.getName.endsWith(ext))
+            .filter(e => !e.isDirectory && e.getName.endsWith(ReportExt))
             .map { e =>
               val bytes = zis.readAllBytes()
               (zipPath, e.getName, bytes.length.toLong, new String(bytes, "UTF-8"))
@@ -127,8 +130,8 @@ object ReportFormat {
     * (zipName/zipDirectory/zipPath/zipSize) so [[Normalize.isuRecords]]
     * extracts them like any other field.
     */
-  def parseZippedDirectory(spark: SparkSession, dir: String, ext: String = ".TXT"): DataFrame = {
-    val files = readZippedReports(spark, dir, ext)
+  def parseZippedDirectory(spark: SparkSession, dir: String): DataFrame = {
+    val files = readZippedReports(spark, dir)
       .withColumn("file", concat(col("zip_path"), lit("!"), col("entry")))
     val meta = files.select(
       col("file"),

@@ -15,11 +15,10 @@ object ReportPipeline {
     "ISU" -> ((b, ts) => Normalize.isuRecords(b, "ISU", ts)))
 
   def ingest(spark: SparkSession, inputDir: String, module: String = "ERP",
-             ext: String = ".TXT",
              generationDate: Column = date_format(current_timestamp(), "yyyy-MM-dd HH:mm:ss")): DataFrame = {
     val normalize = normalizers.getOrElse(module,
       throw new IllegalArgumentException(s"unknown module '$module' (expected ${normalizers.keys.mkString("/")})"))
-    normalize(ReportFormat.parseDirectory(spark, inputDir, ext), generationDate)
+    normalize(ReportFormat.parseDirectory(spark, inputDir), generationDate)
   }
 
   /** Zip-wrapped ISU ingest: archives of report TXT entries → 32-column

@@ -1,7 +1,5 @@
 package graft.ingest
 
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
-
 /** Report record shapes for the ERP / ISU / prototype-20 variants.
   *
   * The reference binds parser output to columns POSITIONALLY (block value
@@ -110,10 +108,4 @@ object ReportSchemas {
       case "GENERATION_DATE" => legacyGenerationDateSpelling
       case other => other
     }
-
-  /** Dynamic all-nullable-string schema from a header list — the reference's
-    * generateSchema (Proof.scala:276-284) in one expression.
-    */
-  def stringSchema(names: Seq[String]): StructType =
-    StructType(names.map(StructField(_, StringType, nullable = true)))
 }

@@ -19,38 +19,29 @@ object Sinks {
       .option("quoteAll", "true")
       .csv(path)
 
-  /** Parquet append. `singleFile=true` reproduces the reference's
-    * one-file-per-write contract via coalesce (no shuffle, unlike the
-    * reference's repartition(1)); default keeps natural partitioning —
-    * at scale prefer `partitionBy` + many files.
-    */
-  def writeParquet(df: DataFrame, path: String, mode: SaveMode = SaveMode.Append,
-                   singleFile: Boolean = false, partitionCols: Seq[String] = Nil): Unit = {
-    val out = if (singleFile) df.coalesce(1) else df
-    val w = out.write.mode(mode)
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(path)
-  }
+  /** Idempotency key: the report file each record came from. */
+  private val KeyCol = "RUTA_DE_REPORTE"
 
   /** The reference's intended-but-stubbed idempotency check (Q6: it re-reads
     * the whole output per input file and ignores the result,
     * Proof.scala:225-234). Real version: ONE left-anti join of incoming
-    * records against the already-persisted report paths.
+    * records against the already-persisted report paths, then a parquet
+    * append in natural partitioning (no repartition(1) like the reference).
     *
     * Scale: the distinct path set is small relative to the data; Catalyst
     * broadcasts it, so the anti-join adds no shuffle to the incoming side.
     */
-  def appendNewReportsOnly(spark: SparkSession, records: DataFrame, path: String,
-                           keyCol: String = "RUTA_DE_REPORTE"): Long = {
+  def appendNewReportsOnly(spark: SparkSession, records: DataFrame, path: String): Long = {
     val fresh =
       if (!parquetExists(spark, path)) records
       else {
-        val seen = spark.read.parquet(path).select(col(keyCol)).distinct()
-        records.join(broadcast(seen), Seq(keyCol), "left_anti")
+        val seen = spark.read.parquet(path).select(col(KeyCol)).distinct()
+        records.join(broadcast(seen), Seq(KeyCol), "left_anti")
       }
     val cached = fresh.cache()
     try {
       val n = cached.count()
-      if (n > 0) writeParquet(cached, path)
+      if (n > 0) cached.write.mode(SaveMode.Append).parquet(path)
       n
     } finally { cached.unpersist(); () }
   }

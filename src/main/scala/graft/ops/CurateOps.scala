@@ -613,8 +613,9 @@ object CurateOps {
   /** Orient each edge from the lower-(degree, id) endpoint to the higher
     * — every triangle is counted exactly once and the path-join fan-out
     * is bounded by the oriented out-degree (≤ √(2m) on any graph), never
-    * the raw degree of hub nodes. GraphProbe measures exactly this bound
-    * on Zipf-degree graphs.
+    * the raw degree of hub nodes. Measured on Zipf-degree graphs (SURVEY
+    * §8.11): at 3.45M edges, 14.5M oriented vs 46.4B raw wedges, max
+    * out-degree 57 vs max raw degree 301k.
     */
   private[graft] def orientEdges(edges: DataFrame, deg: DataFrame): DataFrame =
     edges

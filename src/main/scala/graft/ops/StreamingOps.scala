@@ -383,7 +383,8 @@ object StreamingOps {
     */
   /** One watermarked side of the click→purchase interval join, off an
     * arbitrary staged zone — shared by the catalog entries (hash zone,
-    * 2 files/trigger) and StreamProbe (time-ordered many-file zone).
+    * 2 files/trigger) and StreamStateSpec (time-ordered many-file zone,
+    * the shape of the SURVEY §8.10 decade runs).
     */
   private[graft] def sideStream(spark: SparkSession, src: String, t: String,
       filesPerTrigger: Int): DataFrame = {
@@ -503,7 +504,7 @@ object StreamingOps {
     */
   /** Run `body` on the RocksDB state store (transformWithState requires
     * it), restoring the previous provider after — shared by q184 and
-    * StreamProbe.
+    * StreamStateSpec.
     */
   private[graft] def withRocksDb[T](spark: SparkSession)(body: => T): T = {
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
@@ -749,8 +750,8 @@ object StreamingOps {
     */
   /** The q231 timer-session topology (un-sunk): watermark → groupByKey →
     * transformWithState with event-time timers. Caller must wrap in
-    * [[withRocksDb]]. Shared with StreamProbe so probe and catalog run
-    * the same code.
+    * [[withRocksDb]]. Shared with StreamStateSpec so the eviction test
+    * and the catalog run the same code.
     */
   private[graft] def timerSessionStream(spark: SparkSession, src: String,
       filesPerTrigger: Int): DataFrame = {
@@ -1031,7 +1032,8 @@ object StreamingOps {
   // emissions are monotone in (v1, v2, v3), so the memory-sink reduce
   // max(struct(…)) recovers exactly the final state per user; the oracle
   // is the batch top-3-distinct per user.
-  /** The q252 MapState top-k topology (un-sunk; StreamProbe replays it). */
+  /** The q252 MapState top-k topology (un-sunk; StreamStateSpec replays
+    * it; its decade run is SURVEY §8.16). */
   private[graft] def topValuesUpdates(spark: SparkSession, src: String,
       filesPerTrigger: Int): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}

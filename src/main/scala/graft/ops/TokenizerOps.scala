@@ -140,9 +140,9 @@ object TokenizerOps {
 
   // The 32 merge rounds are SEQUENTIALLY dependent (each round's argmax
   // is the next round's replace literal), so one driver action per round
-  // is inherent — but the round body needs none of Catalyst: the r14
-  // JobProbe census measured 106 jobs / ~2.8 s of pure per-round plan
-  // compilation over 32 rounds (the §8.27 class). The inner loop
+  // is inherent — but the round body needs none of Catalyst: a round-14
+  // per-job census (SURVEY §8.30) measured 106 jobs / ~2.8 s of pure per-
+  // round plan compilation over 32 rounds (the §8.27 class). The inner loop
   // therefore runs on RAW RDDs (the q255 treatment): the word-type state
   // is built ONCE as a DataFrame (token scan + hash agg — the only
   // data-sized step), then each round is one job — a map-side-combined

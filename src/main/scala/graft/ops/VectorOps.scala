@@ -508,19 +508,6 @@ object VectorOps {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  val q49Sql: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS v,
-      |    list_reduce(list_transform(embedding::DOUBLE[], x -> x * x), (a, b) -> a + b) AS n2
-      |  FROM embeddings)
-      |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-      |  FLOOR((list_reduce(list_transform(range(1, 65),
-      |      i -> a.v[i] * b.v[i]), (x, y) -> x + y) / sqrt(a.n2 * b.n2)) * 1e4 + 0.5) / 1e4 AS sim
-      |FROM base a JOIN base b ON a.vec_id < b.vec_id
-      |WHERE list_reduce(list_transform(range(1, 65),
-      |      i -> a.v[i] * b.v[i]), (x, y) -> x + y) / sqrt(a.n2 * b.n2) >= 0.4
-      |ORDER BY id_a, id_b""".stripMargin
-
   // --------------------------------------------------------------------------
   // q104 — bucketed cosine near-dup: the scale-path primary for q49's
   // semantics, shipped at the REALISTIC near-dup setting — threshold 0.9
@@ -573,7 +560,6 @@ object VectorOps {
     }
     Seq.fill(bands * planesPerBand)(Seq.fill(64)(next()))
   }
-  private[ops] val ndPlanes: Seq[Seq[Double]] = ndPlanesFor(ndBands, ndPlanesPerBand)
 
   /** Base ∪ deterministic twins of every 10th vector (see q104 comment). */
   private[ops] def plantedTwinCorpus(spark: SparkSession, dir: String): DataFrame = {
@@ -635,20 +621,6 @@ object VectorOps {
       .groupBy(col("id_a"), col("id_b"))
       .agg(Num.pround(first(col("sim")), 4).as("sim"))
       .orderBy(col("id_a"), col("id_b"))
-  }
-
-  /** Distinct LSH candidate pairs for a (bands, planesPerBand) setting —
-    * the pre-threshold fan-out a capacity plan is sized against (the
-    * ScaleProbe measures this curve across synthetic decades).
-    */
-  private[graft] def bandCandidatePairs(spark: SparkSession, embeddings: DataFrame,
-                                        bands: Int, planesPerBand: Int): DataFrame = {
-    val keyed = bandKeyed(spark, embeddings, bands, planesPerBand)
-      .drop("v")
-    keyed.toDF("id_a", "band", "bucket")
-      .join(keyed.toDF("id_b", "band", "bucket"), Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
   }
 
   /** One signature pass (native codegen'd expression — the SQL HOF
@@ -922,8 +894,8 @@ object VectorOps {
   //   1. Seed count k = max(8, n div 256) GROWS with the corpus
   //      (SemDeDup's k ∝ n / target-cluster-size), so cluster sizes stay
   //      ~256-bounded and within-cluster pair mass is Θ(n·256) — linear —
-  //      instead of Θ((n/8)²) under the old fixed 8 seeds. The ScaleProbe
-  //      decade curve measures exactly this (semdedup_candidates).
+  //      instead of Θ((n/8)²) under the old fixed 8 seeds. The decade
+  //      curve (SURVEY §8.19): candidates 20.6k → 304k at 1×→10×, ~linear.
   //   2. Banding is the PLANNER-derived realistic setting (16 bands × 8
   //      planes), not the 64×4 stress setting q104 was demoted for:
   //      q273's s-curve arithmetic (pinned in SeriesEncodeSpec) gives
@@ -941,7 +913,7 @@ object VectorOps {
   private[ops] val sdPlanesPerBand = 8
 
   /** Nearest-seed assignment with k = max(8, n div 256) — q172's first
-    * stage, shared with the probe helper below.
+    * stage.
     */
   private def sdAssigned(spark: SparkSession, emb: DataFrame): DataFrame = {
     graft.functions.CosineSimilarity.register(spark)
@@ -982,21 +954,6 @@ object VectorOps {
       .join(assigned.groupBy(col("cluster")).agg(count(lit(1)).as("n_vecs")), Seq("cluster"))
       .select(col("cluster"), col("n_vecs"), (col("n_vecs") - col("n_kept")).as("n_removed"))
       .orderBy(col("cluster"))
-  }
-
-  /** q172's pre-threshold candidate-pair set (cluster ∧ band ∧ bucket
-    * collisions) — the fan-out the ScaleProbe decade curve measures.
-    */
-  private[graft] def semanticDedupCandidatePairs(spark: SparkSession,
-                                                 emb: DataFrame): DataFrame = {
-    val assigned = sdAssigned(spark, emb)
-    val keyed = bandKeyed(spark, emb, sdBands, sdPlanesPerBand).drop("v")
-      .join(assigned, Seq("vec_id"))
-    keyed.toDF("id_a", "band", "bucket", "cluster")
-      .join(keyed.toDF("id_b", "band", "bucket", "cluster"),
-        Seq("cluster", "band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
   }
 
   val q172Sql: String =

@@ -305,10 +305,11 @@ class PlanLintSpec extends SparkSpec {
   }
 
   // --------------------------------------------------------------------------
-  // SortAggregate-over-raw-scan lint (round-13 promotion of the PlanScan
-  // triage tool — the q32 post-mortem cliff, SURVEY §8.26): an aggregate
-  // whose buffer is var-length (STRING/STRUCT/ARRAY mins, collect_list)
-  // is not UnsafeRow-mutable, so Spark silently plans SortAggregate —
+  // SortAggregate-over-raw-scan lint (round-13 promotion of the round-12
+  // catalog-wide SortAggregate audit — the q32 post-mortem cliff, SURVEY
+  // §8.26): an aggregate whose buffer is var-length (STRING/STRUCT/ARRAY
+  // mins, collect_list) is not UnsafeRow-mutable, so Spark silently
+  // plans SortAggregate —
   // a FULL SORT of the aggregate's input stream per partial. Over a
   // bounded frame (a post-aggregate grid, a LIMIT cut) that is a chosen,
   // cheap shape; over a raw-table-sized scan it is a measured multi-

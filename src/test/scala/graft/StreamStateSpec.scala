@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -7,17 +8,50 @@ import org.apache.spark.sql.streaming.Trigger
   * (SURVEY §8.10): over a time-ordered multi-batch replay, peak state
   * must be a watermark-window slice of the stream, never the whole
   * stream, and the streamed result must still equal its batch twin.
-  * StreamProbe measures the same topologies at 1×/3×/10×; this spec is
-  * the CI-fast guard that eviction keeps happening at all.
+  * The same topologies were measured at 1×/3×/10× stream length (SURVEY
+  * §8.10/§8.14/§8.16); this spec is the CI-fast guard that eviction keeps
+  * happening at all.
   */
 class StreamStateSpec extends SparkSpec {
+
+  /** Time-ordered landing zone: n events over spanDays days (constant
+    * arrival rate), 1500 users, 5 types, ts strictly increasing in
+    * event_id, written as nFiles range-partitioned files with increasing
+    * mod-times so the file source replays them in event-time order.
+    */
+  private def genEventsZone(spark: SparkSession, dir: String, n: Long,
+      spanDays: Int, nFiles: Int): String = {
+    val startUs = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli * 1000L
+    val stepUs = (spanDays * 86400L * 1000000L) / n // span / rows
+    val zone = s"$dir/events_zone"
+    spark.range(n).select(
+      col("id").as("event_id"),
+      timestamp_micros(lit(startUs) + col("id") * lit(stepUs) +
+        pmod(xxhash64(col("id"), lit(3)), lit(stepUs))).as("ts"),
+      pmod(xxhash64(col("id"), lit(7)), lit(1500)).as("user_id"),
+      element_at(array(Seq("click", "view", "purchase", "signup", "error").map(lit): _*),
+        (pmod(xxhash64(col("id"), lit(11)), lit(5)) + 1).cast("int")).as("event_type"),
+      round(pmod(xxhash64(col("id"), lit(13)), lit(19999)).cast("double") / 100.0 + 1.0, 2)
+        .as("value"))
+      .repartitionByRange(nFiles, col("ts"))
+      .sortWithinPartitions("ts")
+      .write.mode("overwrite").parquet(zone)
+    // file-source replay order is (modificationTime, path) oldest-first;
+    // task completion order is arbitrary, so pin increasing mod-times in
+    // part order (range partition i = i-th time slice)
+    val parts = new java.io.File(zone).listFiles()
+      .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
+    val base = System.currentTimeMillis() - (parts.length + 10) * 1000L
+    parts.zipWithIndex.foreach { case (f, i) => f.setLastModified(base + i * 1000L) }
+    zone
+  }
 
   private lazy val zone: String = {
     val dir = java.nio.file.Files.createTempDirectory("graft_streamstate").toString
     // 6000 events / 30 days / 12 files → 6 ordered micro-batches of ~5
     // days each at 2 files/trigger; watermark (10 min) « batch span, so
     // join/dedup state should hold ~1-2 batches, never all 6
-    StreamProbe.genEventsZone(spark, dir, 6000L, 30, 12)
+    genEventsZone(spark, dir, 6000L, 30, 12)
   }
 
   private def runAndMeasure(stream: org.apache.spark.sql.DataFrame, mode: String,

@@ -58,6 +58,24 @@ class ReportIngestSpec extends SparkSpec {
     assert(kv("status") === "FINISHED")
   }
 
+  test("reads *.TXT files recursively and skips other extensions") {
+    val dir = tmpDir()
+    Files.createDirectories(dir.resolve("sub"))
+    writeReport(dir, "a.TXT", ReportPipeline.renderReport(Seq(erpBlock(1))))
+    writeReport(dir, "sub/b.TXT", ReportPipeline.renderReport(Seq(erpBlock(2))))
+    // decoys: another extension, and the right one in the wrong case
+    writeReport(dir, "c.csv", ReportPipeline.renderReport(Seq(erpBlock(3))))
+    writeReport(dir, "d.txt", ReportPipeline.renderReport(Seq(erpBlock(4))))
+    val root = dir.getFileName.toString + "/"
+    val got = ReportFormat.parseDirectory(spark, dir.toString).collect()
+      .map { r =>
+        val f = r.getAs[String]("file")
+        (f.substring(f.indexOf(root) + root.length), r.getAs[Map[String, String]]("kv")("file"))
+      }
+      .sorted.toSeq
+    assert(got === Seq("a.TXT" -> "data_1.csv", "sub/b.TXT" -> "data_2.csv"))
+  }
+
   test("values containing ':' survive intact (Q3 fix)") {
     val blocks = parseText(ReportPipeline.renderReport(Seq(erpBlock(7))))
     val kv = blocks.collect()(0).getAs[Map[String, String]]("kv")

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{SparkSpec, Tables}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -9,6 +10,21 @@ import org.apache.spark.sql.types.DecimalType
   */
 class ScaleSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
+
+  private val DimN = 60000L
+
+  /** fact: 600k·m rows; key 1 holds ~20%, rest uniform over the dim
+    * domain. dim: one row per key.
+    */
+  private def genFact(spark: SparkSession, m: Int): DataFrame =
+    spark.range(600000L * m).select(
+      when(pmod(xxhash64(col("id"), lit(3)), lit(5)) === 0, lit(1L))
+        .otherwise(pmod(xxhash64(col("id"), lit(5)), lit(DimN)) + 1).as("k"),
+      (pmod(xxhash64(col("id"), lit(7)), lit(100000)).cast("double") / 100.0).as("v"))
+
+  private def genDim(spark: SparkSession): DataFrame =
+    spark.range(DimN).select((col("id") + 1).as("dk"),
+      pmod(xxhash64(col("id"), lit(11)), lit(25)).cast("int").as("grp"))
 
   test("bucketed tables join without any Exchange (co-located sort-merge join)") {
     Tables.lineitem(spark, dir)
@@ -181,13 +197,13 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("AQE skew-join splits the hot partition (skew=true in the final plan)") {
-    // SkewProbe's input at 1×: one key holds 20% of 600k fact rows. With
-    // 64 shuffle partitions the hot partition is ~2 MB vs ~120 KB median
+    // The SURVEY §8.11 skew input at 1×: one key holds 20% of 600k fact
+    // rows. With 64 shuffle partitions the hot partition is ~2 MB vs ~120 KB median
     // (factor ~17 > 5), so with thresholds sized to the volume AQE MUST
     // take the skew split — this pins the safety net the catalog relies
     // on for un-salted joins.
-    val fact = graft.SkewProbe.genFact(spark, 1).localCheckpoint()
-    val dim = graft.SkewProbe.genDim(spark).localCheckpoint()
+    val fact = genFact(spark, 1).localCheckpoint()
+    val dim = genDim(spark).localCheckpoint()
     val confs = Seq(
       "spark.sql.shuffle.partitions" -> "64",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
@@ -213,7 +229,7 @@ class ScaleSpec extends SparkSpec {
     // deterministic balance check with the SAME Murmur3 hash Spark's
     // HashPartitioning uses: salting 16 ways must cut the hot partition
     // by at least 4× (expected ~9×: 120k hot rows spread over 16 salts)
-    val fact = graft.SkewProbe.genFact(spark, 1).localCheckpoint()
+    val fact = genFact(spark, 1).localCheckpoint()
     val p = 32
     def maxPart(df: org.apache.spark.sql.DataFrame, cols: Seq[String]): Long =
       df.groupBy(pmod(hash(cols.map(col): _*), lit(p)).as("part"))

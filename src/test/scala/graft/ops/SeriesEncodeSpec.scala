@@ -144,8 +144,9 @@ class SeriesEncodeSpec extends SparkSpec {
   test("q172 banding is the planner's pick: cheapest config with full recall at the dup regime") {
     // q273's s-curve arithmetic, specialized to cosine LSH: per-band
     // collision p(s) = (1 − θ/π)^r, any-band collision 1 − (1−p^r)^b.
-    // The dup regime: true semantic dups sit at s ≥ 0.9 (ScaleProbe's
-    // jitter twins measure ≈ 0.99996); a random pair costs b·2⁻ʳ
+    // The dup regime: true semantic dups sit at s ≥ 0.9 (the synthetic
+    // jitter twins of the SURVEY §8.7 decade runs measure ≈ 0.99996); a
+    // random pair costs b·2⁻ʳ
     // expected band collisions. The shipped (b, r) must be the CHEAPEST
     // of the planner's config grid whose collision at s = 0.9 is ≥ 99.5%.
     val configs = Seq((64, 4), (32, 8), (16, 8), (8, 16))
