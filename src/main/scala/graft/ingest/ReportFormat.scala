@@ -1,7 +1,12 @@
 package graft.ingest
 
+import java.util.regex.Pattern
+
+import scala.collection.immutable.ListMap
+import scala.collection.mutable
+
+import org.apache.commons.lang3.StringUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Partition-parallel reformulation of the reference's stateful block
@@ -9,14 +14,15 @@ import org.apache.spark.sql.functions._
   * RDD forced to one partition by `repartition(1)`).
   *
   * A report file is a sequence of `key: value` lines; a block ends at the
-  * line whose key matches `\bstatus\b` (Proof.scala:126). Here block
-  * boundaries are recovered with a running-count window per file, then each
-  * block folds into a key→value map — no mutable state, correct at any
-  * partition count (property-tested), one shuffle for the groupBy.
+  * line whose key matches `\bstatus\b` (Proof.scala:126). The only state
+  * that crosses lines lives inside one file, and the reader yields one row
+  * per file, so the reference's sequential fold runs as a plain function
+  * ([[blocks]]) on each file's text: no shuffle, no session conf, correct
+  * at any partition count (property-tested).
   *
   * Deviations from the reference, all deliberate (SURVEY §2.4):
-  *  - split on the FIRST ':' only (limit 2) — the reference's unlimited
-  *    split truncates values containing ':' such as hdfs:// URIs (Q3);
+  *  - split on the FIRST ':' only — the reference's unlimited split
+  *    truncates values containing ':' such as hdfs:// URIs (Q3);
   *  - keyed (not positional) records — robust to reordered/missing lines;
   *  - a trailing block with no status line is dropped, matching the
   *    reference's observable output (it never emits an unterminated block).
@@ -27,6 +33,8 @@ object ReportFormat {
 
   /** Report file extension (case-sensitive), inside directories and zips. */
   val ReportExt = ".TXT"
+
+  private val terminator = Pattern.compile(s"\\b($BlockTerminatorKey)\\b")
 
   /** Read report files under `dir` (recursively, `*.TXT` like the
     * reference's extension filter, Proof.scala:69-83) as one row per file.
@@ -48,52 +56,40 @@ object ReportFormat {
         url_decode(regexp_replace(input_file_name(), "\\+", "%2B")).as("file"),
         col("value").as("text"))
 
-  /** Explode whole-file text into ordered lines: (file, line_no, line). */
-  def toLines(files: DataFrame): DataFrame =
-    files
-      // a UTF-8 BOM would otherwise ride on the first line's key and make
-      // it miss every key match; CRLF is absorbed by the \r?\n split
-      .select(col("file"),
-        posexplode(split(regexp_replace(col("text"), "^\\uFEFF", ""), "\r?\n")))
-      .withColumnRenamed("pos", "line_no")
-      .withColumnRenamed("col", "line")
-      .filter(trim(col("line")) =!= "")
-
-  /** Assemble `key: value` lines into one row per status-terminated block:
-    * (file, block_id, kv map<string,string>, n_lines).
-    *
-    * Scale: the window partitions by file (reports are small and numerous —
-    * ideal parallelism unit); the groupBy reuses the same (file) clustering
-    * so AQE coalesces; duplicate keys within a block keep the LAST value
-    * (explicitly configured — default would throw).
+  /** One file's text → its status-terminated blocks, in file order, each a
+    * key→value map. A leading UTF-8 BOM is dropped (it would ride on the
+    * first key); lines split on `\r?\n`; space-only lines are skipped; key
+    * and value split at the first ':' (no colon → value ""); the terminator
+    * line belongs to the block it ends; a duplicate key keeps its last
+    * value; a trailing unterminated block is dropped.
     */
-  def assembleBlocks(lines: DataFrame): DataFrame = {
-    val kvSplit = split(col("line"), ":", 2)
-    val w = Window.partitionBy(col("file")).orderBy(col("line_no"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val isEnd = col("key").rlike(s"\\b($BlockTerminatorKey)\\b")
-
-    lines.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    lines
-      .withColumn("key", trim(kvSplit.getItem(0)))
-      // get() is 0-based and null-safe out of bounds (ANSI element_at
-      // throws on colon-less lines, killing the whole ingest)
-      .withColumn("val", trim(coalesce(get(kvSplit, lit(1)), lit(""))))
-      .withColumn("is_end", isEnd.cast("int"))
-      // terminator stays in its own block: running count minus self
-      .withColumn("block_id", sum(col("is_end")).over(w) - col("is_end"))
-      .groupBy(col("file"), col("block_id"))
-      .agg(
-        map_from_entries(collect_list(struct(col("key"), col("val")))).as("kv"),
-        count(lit(1)).as("n_lines"),
-        max(col("is_end")).as("has_end"))
-      .filter(col("has_end") === 1)
-      .drop("has_end")
+  def blocks(text: String): Seq[Map[String, String]] = {
+    // ASCII spaces only, like Spark `trim` and DuckDB `TRIM` (String.trim
+    // would also strip tabs and control characters)
+    def trim(s: String) = StringUtils.strip(s, " ")
+    val kv = mutable.LinkedHashMap.empty[String, String]
+    text.stripPrefix("\uFEFF").split("\r?\n").iterator.filter(trim(_).nonEmpty).flatMap { line =>
+      val i = line.indexOf(':')
+      val key = trim(if (i < 0) line else line.substring(0, i))
+      kv(key) = if (i < 0) "" else trim(line.substring(i + 1))
+      if (!terminator.matcher(key).find()) None
+      else { val block = ListMap.from(kv); kv.clear(); Some(block) }
+    }.toVector
   }
+
+  private val blocksUdf = udf(blocks _)
+
+  /** One-row-per-file frame (a `text` column plus any others) → one row per
+    * status-terminated block: the other columns, `block_id` (the block's
+    * 0-based position in its file) and `kv` map<string,string>.
+    */
+  def assembleBlocks(files: DataFrame): DataFrame =
+    files.select(col("*"), posexplode(blocksUdf(col("text"))).as(Seq("block_id", "kv")))
+      .drop("text")
 
   /** Full text → blocks pipeline over a directory. */
   def parseDirectory(spark: SparkSession, dir: String): DataFrame =
-    assembleBlocks(toLines(readReportFiles(spark, dir)))
+    assembleBlocks(readReportFiles(spark, dir))
 
   /** Zip-wrapped reports (the ISU shape the reference declares but never
     * implements — Proof.scala:215-224; zip name/dir/path/size fields at
@@ -128,21 +124,19 @@ object ReportFormat {
   /** Blocks from zip-wrapped reports, with the wrapper metadata injected
     * into each block's kv map under the reference ISU field keys
     * (zipName/zipDirectory/zipPath/zipSize) so [[Normalize.isuRecords]]
-    * extracts them like any other field.
+    * extracts them like any other field. The wrapper's values win over a
+    * same-named key in the entry's own text.
     */
   def parseZippedDirectory(spark: SparkSession, dir: String): DataFrame = {
-    val files = readZippedReports(spark, dir)
-      .withColumn("file", concat(col("zip_path"), lit("!"), col("entry")))
-    val meta = files.select(
-      col("file"),
-      map(
-        lit("zipName"), regexp_extract(col("zip_path"), "([^/]+)$", 1),
-        lit("zipDirectory"), regexp_replace(col("zip_path"), "/[^/]+$", ""),
-        lit("zipPath"), col("zip_path"),
-        lit("zipSize"), col("entry_bytes").cast("string")).as("zip_kv"))
-    assembleBlocks(toLines(files.select(col("file"), col("text"))))
-      .join(meta, "file")
-      .withColumn("kv", map_concat(col("kv"), col("zip_kv")))
-      .drop("zip_kv")
+    val zipKv = Seq(
+      "zipName" -> regexp_extract(col("zip_path"), "([^/]+)$", 1),
+      "zipDirectory" -> regexp_replace(col("zip_path"), "/[^/]+$", ""),
+      "zipPath" -> col("zip_path"),
+      "zipSize" -> col("entry_bytes").cast("string"))
+    assembleBlocks(readZippedReports(spark, dir)
+        .withColumn("file", concat(col("zip_path"), lit("!"), col("entry"))))
+      .select(col("file"), col("block_id"), map_concat(
+        map_filter(col("kv"), (k, _) => !k.isin(zipKv.map(_._1): _*)),
+        map(zipKv.flatMap { case (k, v) => Seq(lit(k), v) }: _*)).as("kv"))
   }
 }

@@ -90,10 +90,10 @@ object ReportPipeline {
   /** DuckDB twin of [[demoQuery]], generated from the SAME column mapping
     * (`ReportSchemas.erpColumns`) the Spark side binds: read_text the
     * fixture file, split lines, first-colon key/value split, running-count
-    * block assembly terminated by the `\bstatus\b` key (the exact
-    * `ReportFormat.assembleBlocks` semantics), LAST-value-wins pivot
-    * (arg_max by line number), then the `Normalize` metadata + typing
-    * rules. This is the q50 correctness oracle.
+    * block assembly terminated by the `\bstatus\b` key (the semantics of
+    * the per-file fold `ReportFormat.blocks`, written independently as a
+    * window), LAST-value-wins pivot (arg_max by line number), then the
+    * `Normalize` metadata + typing rules. This is the q50 correctness oracle.
     */
   val q50Sql: String = {
     // columns typedErp promotes from string (must TRY_CAST in the twin)
@@ -103,8 +103,8 @@ object ReportPipeline {
       "TOTAL_COLUMNAS_PREPARACION_DE_MARCO_DE_DATOS",
       "TOTAL_REGISTROS_PREPARACION_DE_MARCO_DE_DATOS",
       "TOTAL_COLUMNAS_OFICIAL", "TOTAL_REGISTROS_OFICIAL")
-    // one LAST_WIN pivot aggregate per source key (arg_max by line_no —
-    // the duplicate-key policy assembleBlocks configures)
+    // one last-value-wins pivot aggregate per source key (arg_max by
+    // line_no — a duplicate key keeps its last value, as in the fold)
     val sourceKeys = ReportSchemas.erpColumns.collect { case (_, Some(k)) => k } ++
       Seq("fileAntColForCountColumns", "fileAntColForCountRows",
         "fileColForCountColumns", "fileColForCountRows")

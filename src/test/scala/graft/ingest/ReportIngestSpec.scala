@@ -3,6 +3,7 @@ package graft.ingest
 import java.nio.file.{Files, Path}
 
 import graft.SparkSpec
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window}
 import org.apache.spark.sql.functions._
 
 object Fixtures {
@@ -93,10 +94,10 @@ class ReportIngestSpec extends SparkSpec {
     val text = ReportPipeline.renderReport((1 to 20).map(erpBlock(_)))
     val dir = tmpDir()
     (1 to 5).foreach(i => writeReport(dir, s"f$i.TXT", text))
-    val lines = ReportFormat.toLines(ReportFormat.readReportFiles(spark, dir.toString))
-    val one = ReportFormat.assembleBlocks(lines.repartition(1))
+    val files = ReportFormat.readReportFiles(spark, dir.toString)
+    val one = ReportFormat.assembleBlocks(files.repartition(1))
       .select("file", "block_id", "kv").collect().toSet
-    val many = ReportFormat.assembleBlocks(lines.repartition(13))
+    val many = ReportFormat.assembleBlocks(files.repartition(13))
       .select("file", "block_id", "kv").collect().toSet
     assert(one === many)
     assert(one.size === 100)
@@ -178,6 +179,32 @@ class ReportIngestSpec extends SparkSpec {
     assert(r1.getAs[String]("MODULO") === "ISU")
     // entries from the same zip, different TXT files → distinct report paths
     assert(rec.select("RUTA_DE_REPORTE").distinct().count() === 2)
+  }
+
+  test("zip wrapper keys win over a same-named key in the entry's text") {
+    val dir = tmpDir()
+    val zos = new java.util.zip.ZipOutputStream(Files.newOutputStream(dir.resolve("w.zip")))
+    try {
+      zos.putNextEntry(new java.util.zip.ZipEntry("r.TXT"))
+      zos.write(ReportPipeline.renderReport(Seq(("zipName" -> "inner.zip") +: erpBlock(1))).getBytes("UTF-8"))
+      zos.closeEntry()
+    } finally zos.close()
+    val rec = ReportPipeline.ingestZipped(spark, dir.toString, generationDate = lit("2026-01-01 00:00:00"))
+      .collect()
+    assert(rec.map(_.getAs[String]("NOMBRE_ZIP")).toSeq === Seq("w.zip"))
+  }
+
+  test("parsing leaves the session conf alone and plans no window or aggregate") {
+    val session = spark.newSession()
+    val dir = tmpDir()
+    writeReport(dir, "a.TXT", ReportPipeline.renderReport(Seq(erpBlock(1), erpBlock(2))))
+    val blocks = ReportFormat.parseDirectory(session, dir.toString)
+    assert(blocks.count() === 2)
+    assert(session.conf.get("spark.sql.mapKeyDedupPolicy") === "EXCEPTION")
+    val windowsOrAggregates = blocks.queryExecution.optimizedPlan.collect {
+      case p @ (_: Window | _: Aggregate) => p.nodeName
+    }
+    assert(windowsOrAggregates.isEmpty, blocks.queryExecution.optimizedPlan.treeString)
   }
 
   test("prototype-20 records: golden header incl. paren spelling, raw equalsHeaders, skipped-index quirk") {

@@ -4,8 +4,8 @@ import graft.SparkSpec
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** Property: render(blocks) → parse ≡ identity (modulo trim), at any
-  * partition count — the guarantee the reference only gets from
-  * repartition(1) (SURVEY §5.2 item 3).
+  * partition count of the one-row-per-file frame — the guarantee the
+  * reference only gets from repartition(1) (SURVEY §5.2 item 3).
   */
 class ReportRoundtripSpec extends SparkSpec {
 
@@ -29,8 +29,8 @@ class ReportRoundtripSpec extends SparkSpec {
       (blocks: List[Seq[(String, String)]], parts: Int) =>
         val dir = Fixtures.tmpDir()
         Fixtures.writeReport(dir, "p.TXT", ReportPipeline.renderReport(blocks))
-        val lines = ReportFormat.toLines(ReportFormat.readReportFiles(spark, dir.toString))
-        val parsed = ReportFormat.assembleBlocks(lines.repartition(parts))
+        val files = ReportFormat.readReportFiles(spark, dir.toString)
+        val parsed = ReportFormat.assembleBlocks(files.repartition(parts))
           .orderBy("block_id").collect()
           .map(_.getAs[Map[String, String]]("kv"))
         val expected = blocks.map(_.toMap)
@@ -63,8 +63,8 @@ class ReportRoundtripSpec extends SparkSpec {
       (blocks: List[Seq[(String, String)]], parts: Int) =>
         val dir = Fixtures.tmpDir()
         Fixtures.writeReport(dir, "adv.TXT", ReportPipeline.renderReport(blocks))
-        val lines = ReportFormat.toLines(ReportFormat.readReportFiles(spark, dir.toString))
-        val parsed = ReportFormat.assembleBlocks(lines.repartition(parts))
+        val files = ReportFormat.readReportFiles(spark, dir.toString)
+        val parsed = ReportFormat.assembleBlocks(files.repartition(parts))
           .orderBy("block_id").collect()
           .map(_.getAs[Map[String, String]]("kv"))
         parsed.toSeq == blocks.map(_.toMap)
