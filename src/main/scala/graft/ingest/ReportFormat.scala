@@ -41,6 +41,13 @@ object ReportFormat {
     * Executor-side read — the reference materializes whole files on the
     * driver (Q7). `wholetext` keeps per-file line order fully deterministic
     * (report files are KB-scale; one row per file parallelizes per-file).
+    *
+    * The `file` key is built from `_metadata.file_path` with built-in
+    * functions only, so a filter on it (the committed-report filter of
+    * [[Sinks.appendNewReportsOnly]]) is evaluated once per file while the
+    * files are listed, and a committed file is never opened. A filter on
+    * `input_file_name()`, or on a UDF of the path, runs per row after every
+    * file was read.
     */
   def readReportFiles(spark: SparkSession, dir: String): DataFrame =
     spark.read
@@ -48,12 +55,16 @@ object ReportFormat {
       .option("recursiveFileLookup", "true")
       .option("pathGlobFilter", s"*$ReportExt")
       .text(dir)
-      // input_file_name() is URI-encoded ('[' → %5B) — decode so filename
-      // regexes (e.g. the [dd-MM-yyyyTHH_mm_ss] timestamp) see raw names.
-      // url_decode is form-decoding where literal '+' means space, but URI
-      // path encoding leaves '+' as-is — protect it first.
+      // The key stays byte-identical to the former input_file_name() key,
+      // so outputs written before keep deduplicating: `file:/x` becomes
+      // `file:///x`, then the URI-encoded path ('[' → %5B) is decoded so
+      // filename regexes (e.g. the [dd-MM-yyyyTHH_mm_ss] timestamp) see raw
+      // names. url_decode is form-decoding where literal '+' means space,
+      // but URI path encoding leaves '+' as-is — protect it first.
       .select(
-        url_decode(regexp_replace(input_file_name(), "\\+", "%2B")).as("file"),
+        url_decode(regexp_replace(
+          regexp_replace(col("_metadata.file_path"), "^([a-zA-Z][a-zA-Z0-9+.-]*):/(?!/)", "$1:///"),
+          "\\+", "%2B")).as("file"),
         col("value").as("text"))
 
   /** One file's text → its status-terminated blocks, in file order, each a

@@ -30,14 +30,27 @@ object ReportPipeline {
 
   /** Run ingest and persist to both sinks; returns #records newly appended
     * to parquet (idempotent across re-runs of the same input files).
+    *
+    * Order: first the records of the report files that have no committed
+    * record are parsed once and appended to `parquetOut`
+    * ([[Sinks.appendNewReportsOnly]]; committed files are not opened), then
+    * the CSV is rewritten from the committed Parquet table. The CSV is
+    * therefore a snapshot of everything committed so far: each record's
+    * `GENERATION_DATE` is the time of the run that committed it, and the
+    * records of a file since removed from `inputDir` stay in it. Before the
+    * first commit it is written from an empty frame of the record columns.
     */
   def run(spark: SparkSession, inputDir: String, csvOut: String, parquetOut: String,
           module: String = "ERP"): Long = {
-    val records = ingest(spark, inputDir, module).cache()
-    try {
-      Sinks.writeCsv(records, csvOut)
-      Sinks.appendNewReportsOnly(spark, records, parquetOut)
-    } finally { records.unpersist(); () }
+    val records = ingest(spark, inputDir, module)
+    val n = Sinks.appendNewReportsOnly(spark, records, parquetOut)
+    // select pins the record column order: part files appended by the
+    // earlier anti-join design carry the key column first
+    val committed =
+      if (!Sinks.parquetExists(spark, parquetOut)) records.limit(0)
+      else spark.read.parquet(parquetOut).select(records.columns.map(col): _*)
+    Sinks.writeCsv(committed, csvOut)
+    n
   }
 
   /** Render blocks back to report-file text — fixture generator for tests

@@ -288,11 +288,27 @@ class ReportIngestSpec extends SparkSpec {
 
   test("'+' in report filenames survives path decoding") {
     val dir = tmpDir()
-    writeReport(dir, "a+b[01-01-2020T00_00_00].TXT", ReportPipeline.renderReport(Seq(erpBlock(1))))
+    // names whose URI form differs from the raw name, and a nested file;
+    // the key must stay byte-identical to the former input_file_name()
+    // key, or Parquet outputs written before stop deduplicating
+    val names = Seq("a+b[01-01-2020T00_00_00].TXT", "r[01-01-2020T00_00_01].TXT", "a b.TXT",
+      "p%41.TXT", "h#1.TXT", "sub/n.TXT")
+    Files.createDirectories(dir.resolve("sub"))
+    names.zipWithIndex.foreach { case (n, i) =>
+      writeReport(dir, n, ReportPipeline.renderReport(Seq(erpBlock(i)))) }
     val rec = ReportPipeline.ingest(spark, dir.toString, "ERP",
       generationDate = org.apache.spark.sql.functions.lit("2026-01-01 00:00:00"))
-    val path = rec.collect()(0).getAs[String]("RUTA_DE_REPORTE")
-    assert(path.contains("a+b["), path)
+      .select(col("RUTA_DE_REPORTE"), col("ARCHIVO_PROCESADO"),
+        url_decode(regexp_replace(input_file_name(), "\\+", "%2B")).as("legacy"))
+      .collect()
+    assert(rec.length === names.size)
+    rec.foreach { r =>
+      val path = r.getAs[String]("RUTA_DE_REPORTE")
+      val name = names(r.getAs[String]("ARCHIVO_PROCESADO").stripPrefix("data_").stripSuffix(".csv").toInt)
+      assert(path.endsWith("/" + name), path)
+      assert(path === r.getAs[String]("legacy"))
+    }
+    assert(rec.exists(_.getAs[String]("RUTA_DE_REPORTE").contains("a+b[")))
   }
 
   test("UTF-8 BOM and CRLF line endings parse identically to a clean file") {
