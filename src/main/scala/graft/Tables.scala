@@ -42,25 +42,20 @@ object Tables {
   def customer(spark: SparkSession, dir: String): DataFrame  = table(spark, dir, "customer")
   def supplier(spark: SparkSession, dir: String): DataFrame  = table(spark, dir, "supplier")
   def part(spark: SparkSession, dir: String): DataFrame      = table(spark, dir, "part")
-  def orders(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def orders(spark: SparkSession, dir: String): DataFrame =
     tsNormalized(table(spark, dir, "orders"), "o_orderdate")
-  }
-  def lineitem(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def lineitem(spark: SparkSession, dir: String): DataFrame =
     tsNormalized(table(spark, dir, "lineitem"), "l_shipdate")
-  }
   /** `events.ts` has shipped as BOTH parquet TIMESTAMP(NANOS) and
     * TIMESTAMP(MICROS) across driver data drops (NANOS throws
-    * [PARQUET_TYPE_ILLEGAL] without the legacy flag) — the round-5
+    * [PARQUET_TYPE_ILLEGAL] without the legacy nanosAsLong flag, which
+    * `GraftSession.builder` sets for every session it builds) — the round-5
     * silent-loss incident. The µs truncation on the nanos path is safe
     * vs. the DuckDB oracle: the ms-aligned order/window boundaries we
     * compare against are never crossed by sub-microsecond truncation.
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(spark: SparkSession, dir: String): DataFrame =
     tsNormalized(table(spark, dir, "events"), "ts")
-  }
   def documents(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
 }

@@ -36,25 +36,27 @@ object ReportFormat {
 
   private val terminator = Pattern.compile(s"\\b($BlockTerminatorKey)\\b")
 
-  /** Read report files under `dir` (recursively, `*.TXT` like the
-    * reference's extension filter, Proof.scala:69-83) as one row per file.
-    * Executor-side read — the reference materializes whole files on the
-    * driver (Q7). `wholetext` keeps per-file line order fully deterministic
-    * (report files are KB-scale; one row per file parallelizes per-file).
-    *
-    * The `file` key is built from `_metadata.file_path` with built-in
-    * functions only, so a filter on it (the committed-report filter of
-    * [[Sinks.appendNewReportsOnly]]) is evaluated once per file while the
-    * files are listed, and a committed file is never opened. A filter on
-    * `input_file_name()`, or on a UDF of the path, runs per row after every
-    * file was read.
+  /** Largest inflated zip entry in bytes: a zip bomb fails the read instead of the heap. */
+  val MaxEntryBytes: Int = 64 << 20
+
+  /** One row per file under `dir` (recursively) named like `glob`: `file`
+    * (its key), `length` and `content`. Report directories and zip archives
+    * share this one scan, listing rule and key. `binaryFile` opens each file
+    * once, where `wholetext` copied a Hadoop `JobConf` per file. A file
+    * deleted after listing is skipped. Callers cast `content` to string,
+    * which keeps the bytes as they are (no decoding, BOM or line-ending
+    * handling: [[blocks]] does that). The key uses built-in functions of
+    * `_metadata.file_path` only, so a filter on it (the committed-report
+    * filter of [[Sinks.appendNewReportsOnly]]) runs while the files are
+    * listed and a committed file is never opened; a filter on
+    * `input_file_name()` or a UDF runs per row after every file was read.
     */
-  def readReportFiles(spark: SparkSession, dir: String): DataFrame =
-    spark.read
-      .option("wholetext", "true")
+  private def listFiles(spark: SparkSession, dir: String, glob: String): DataFrame =
+    spark.read.format("binaryFile")
       .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", s"*$ReportExt")
-      .text(dir)
+      .option("pathGlobFilter", glob)
+      .option("ignoreMissingFiles", "true")
+      .load(dir)
       // The key stays byte-identical to the former input_file_name() key,
       // so outputs written before keep deduplicating: `file:/x` becomes
       // `file:///x`, then the URI-encoded path ('[' → %5B) is decoded so
@@ -65,7 +67,13 @@ object ReportFormat {
         url_decode(regexp_replace(
           regexp_replace(col("_metadata.file_path"), "^([a-zA-Z][a-zA-Z0-9+.-]*):/(?!/)", "$1:///"),
           "\\+", "%2B")).as("file"),
-        col("value").as("text"))
+        col("length"), col("content"))
+
+  /** Report files under `dir` (recursively, `*.TXT` like the reference,
+    * Proof.scala:69-83) as (`file`, `text`), one row per file, read on the
+    * executors (the reference reads whole files on the driver, Q7). */
+  def readReportFiles(spark: SparkSession, dir: String): DataFrame =
+    listFiles(spark, dir, s"*$ReportExt").select(col("file"), col("content").cast("string").as("text"))
 
   /** One file's text → its status-terminated blocks, in file order, each a
     * key→value map. A leading UTF-8 BOM is dropped (it would ride on the
@@ -102,35 +110,31 @@ object ReportFormat {
   def parseDirectory(spark: SparkSession, dir: String): DataFrame =
     assembleBlocks(readReportFiles(spark, dir))
 
+  /** (`archive!entry`, bytes) of each `*.TXT` entry of one archive, in order;
+    * an entry inflating past [[MaxEntryBytes]] throws an `IOException`. */
+  private def zipEntries(archive: String, bytes: Array[Byte]): Seq[(String, Array[Byte])] =
+    scala.util.Using.resource(new java.util.zip.ZipInputStream(new java.io.ByteArrayInputStream(bytes))) { zis =>
+      Iterator.continually(zis.getNextEntry).takeWhile(_ != null)
+        .filter(e => !e.isDirectory && e.getName.endsWith(ReportExt))
+        .map { e =>
+          val entry = zis.readNBytes(MaxEntryBytes + 1)
+          val key = s"$archive!${e.getName}"
+          if (entry.length <= MaxEntryBytes) (key, entry)
+          else throw new java.io.IOException(s"$key: inflates past $MaxEntryBytes bytes")
+        }.toVector // materialize before the stream closes
+    }
+
   /** Zip-wrapped reports (the ISU shape the reference declares but never
-    * implements — Proof.scala:215-224; zip name/dir/path/size fields at
-    * module/ISU.scala:9-13). Executor-side `binaryFiles` + ZipInputStream:
-    * each archive's `*.TXT` entries become report files whose `file` id is
-    * `zipPath!entry`, and the wrapper metadata rides along as columns
-    * (zip_name, zip_directory, zip_path, zip_size).
-    *
-    * Scale: one task per archive (binaryFiles is not splittable) — right
-    * for many-small-archives ingest; entries are materialized per archive,
-    * bounded by archive size.
+    * implements — Proof.scala:215-224; zip fields at module/ISU.scala:9-13):
+    * each `*.zip` under `dir` (recursively) exploded into its `*.TXT`
+    * entries as `zip_path` (the archive's key), `zip_size` (its length),
+    * `file` (`zip_path!entry`) and `text`. One task reads a whole archive.
     */
-  def readZippedReports(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spark.sparkContext.binaryFiles(s"$dir/*.zip")
-      .flatMap { case (zipPath, pds) =>
-        val zis = new java.util.zip.ZipInputStream(pds.open())
-        try {
-          Iterator.continually(zis.getNextEntry)
-            .takeWhile(_ != null)
-            .filter(e => !e.isDirectory && e.getName.endsWith(ReportExt))
-            .map { e =>
-              val bytes = zis.readAllBytes()
-              (zipPath, e.getName, bytes.length.toLong, new String(bytes, "UTF-8"))
-            }
-            .toList // materialize before the stream closes
-        } finally zis.close()
-      }
-      .toDF("zip_path", "entry", "entry_bytes", "text")
-  }
+  def readZippedReports(spark: SparkSession, dir: String): DataFrame =
+    listFiles(spark, dir, "*.zip")
+      .select(col("file").as("zip_path"), col("length").as("zip_size"),
+        explode(udf(zipEntries _).apply(col("file"), col("content"))).as("e"))
+      .select(col("zip_path"), col("zip_size"), col("e._1").as("file"), col("e._2").cast("string").as("text"))
 
   /** Blocks from zip-wrapped reports, with the wrapper metadata injected
     * into each block's kv map under the reference ISU field keys
@@ -143,9 +147,8 @@ object ReportFormat {
       "zipName" -> regexp_extract(col("zip_path"), "([^/]+)$", 1),
       "zipDirectory" -> regexp_replace(col("zip_path"), "/[^/]+$", ""),
       "zipPath" -> col("zip_path"),
-      "zipSize" -> col("entry_bytes").cast("string"))
-    assembleBlocks(readZippedReports(spark, dir)
-        .withColumn("file", concat(col("zip_path"), lit("!"), col("entry"))))
+      "zipSize" -> col("zip_size").cast("string"))
+    assembleBlocks(readZippedReports(spark, dir))
       .select(col("file"), col("block_id"), map_concat(
         map_filter(col("kv"), (k, _) => !k.isin(zipKv.map(_._1): _*)),
         map(zipKv.flatMap { case (k, v) => Seq(lit(k), v) }: _*)).as("kv"))

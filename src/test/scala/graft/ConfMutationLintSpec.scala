@@ -14,8 +14,7 @@ class ConfMutationLintSpec extends AnyFunSuite {
   /** Path under src/main/scala/graft → why it still sets conf. */
   private val allowed = Map(
     "ops/LoopConf.scala" -> "withNarrowShuffle/withSizedCoalesce swap shuffle-partition and AQE settings around a build",
-    "ops/StreamingOps.scala" -> "state-partition, no-data-batch and state-store-provider scopes around a streaming query",
-    "Tables.scala" -> "nanosAsLong before reading TIMESTAMP(NANOS) parquet columns")
+    "ops/StreamingOps.scala" -> "state-partition, no-data-batch and state-store-provider scopes around a streaming query")
 
   private val confMutation = """\bconf\.(?:set|unset|setConfString)\(""".r
 

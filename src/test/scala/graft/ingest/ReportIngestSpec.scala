@@ -37,6 +37,16 @@ object Fixtures {
     Files.writeString(dir.resolve(name), text)
 
   def tmpDir(): Path = Files.createTempDirectory("graft_reports")
+
+  /** A zip archive at `zip` holding one rendered report entry per (name, blocks). */
+  def writeZip(zip: Path, entries: (String, Seq[Seq[(String, String)]])*): Unit = {
+    val zos = new java.util.zip.ZipOutputStream(Files.newOutputStream(zip))
+    try entries.foreach { case (name, blocks) =>
+      zos.putNextEntry(new java.util.zip.ZipEntry(name))
+      zos.write(ReportPipeline.renderReport(blocks).getBytes("UTF-8"))
+      zos.closeEntry()
+    } finally zos.close()
+  }
 }
 
 class ReportIngestSpec extends SparkSpec {
@@ -159,15 +169,7 @@ class ReportIngestSpec extends SparkSpec {
   test("zip-wrapped ISU ingest: entries extracted, wrapper metadata attached") {
     val dir = tmpDir()
     val zipFile = dir.resolve("batch_01.zip")
-    val zos = new java.util.zip.ZipOutputStream(java.nio.file.Files.newOutputStream(zipFile))
-    try {
-      Seq("r1.TXT" -> Seq(erpBlock(1), erpBlock(2)), "r2.TXT" -> Seq(erpBlock(3))).foreach {
-        case (name, blocks) =>
-          zos.putNextEntry(new java.util.zip.ZipEntry(name))
-          zos.write(ReportPipeline.renderReport(blocks).getBytes("UTF-8"))
-          zos.closeEntry()
-      }
-    } finally zos.close()
+    writeZip(zipFile, "r1.TXT" -> Seq(erpBlock(1), erpBlock(2)), "r2.TXT" -> Seq(erpBlock(3)))
     val rec = ReportPipeline.ingestZipped(spark, dir.toString,
       generationDate = org.apache.spark.sql.functions.lit("2026-01-01 00:00:00"))
     assert(rec.count() === 3)
@@ -179,6 +181,44 @@ class ReportIngestSpec extends SparkSpec {
     assert(r1.getAs[String]("MODULO") === "ISU")
     // entries from the same zip, different TXT files → distinct report paths
     assert(rec.select("RUTA_DE_REPORTE").distinct().count() === 2)
+    // the archive's own size, and the same file:/// key form as a report file's
+    assert(r1.getAs[String]("TAMANO_ZIP") === Files.size(zipFile).toString)
+    assert(r1.getAs[String]("RUTA_ZIP").startsWith("file:///"), r1.getAs[String]("RUTA_ZIP"))
+    assert(r1.getAs[String]("RUTA_DE_REPORTE") === r1.getAs[String]("RUTA_ZIP") + "!r1.TXT")
+    // archives are found recursively, like report files
+    Files.createDirectories(dir.resolve("sub"))
+    writeZip(dir.resolve("sub/batch_02.zip"), "r3.TXT" -> Seq(erpBlock(4)))
+    val nested = ReportPipeline.ingestZipped(spark, dir.toString,
+      generationDate = org.apache.spark.sql.functions.lit("2026-01-01 00:00:00"))
+      .filter(col("ARCHIVO_PROCESADO") === "data_4.csv").collect()
+    assert(nested.map(_.getAs[String]("RUTA_DE_REPORTE")).toSeq ===
+      Seq("file://" + dir.resolve("sub/batch_02.zip") + "!r3.TXT"))
+    assert(nested.map(_.getAs[String]("NOMBRE_ZIP")).toSeq === Seq("batch_02.zip"))
+  }
+
+  test("a zip entry inflating past MaxEntryBytes fails naming archive!entry; one of exactly MaxEntryBytes reads") {
+    def zeros(dir: Path, bytes: Int): Unit = {
+      val zos = new java.util.zip.ZipOutputStream(Files.newOutputStream(dir.resolve("big.zip")))
+      try {
+        zos.putNextEntry(new java.util.zip.ZipEntry("big.TXT"))
+        val chunk = new Array[Byte](1 << 20)
+        var left = bytes
+        while (left > 0) { val n = math.min(left, chunk.length); zos.write(chunk, 0, n); left -= n }
+        zos.closeEntry()
+      } finally zos.close()
+    }
+    val over = tmpDir()
+    zeros(over, ReportFormat.MaxEntryBytes + 1)
+    val e = intercept[Exception](ReportPipeline.ingestZipped(spark, over.toString).collect())
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[java.io.IOException] &&
+      c.getMessage.startsWith("file://" + over.resolve("big.zip") + "!big.TXT")), causes.mkString("\n"))
+    val exact = tmpDir()
+    zeros(exact, ReportFormat.MaxEntryBytes)
+    val read = ReportFormat.readZippedReports(spark, exact.toString)
+      .select(col("file"), length(col("text"))).collect()
+    assert(read.map(r => (r.getString(0), r.getInt(1))).toSeq ===
+      Seq(("file://" + exact.resolve("big.zip") + "!big.TXT", ReportFormat.MaxEntryBytes)))
   }
 
   test("zip wrapper keys win over a same-named key in the entry's text") {
@@ -309,6 +349,19 @@ class ReportIngestSpec extends SparkSpec {
       assert(path === r.getAs[String]("legacy"))
     }
     assert(rec.exists(_.getAs[String]("RUTA_DE_REPORTE").contains("a+b[")))
+  }
+
+  test("a report file deleted after listing is skipped, not a failed batch") {
+    val dir = tmpDir()
+    writeReport(dir, "a.TXT", ReportPipeline.renderReport(Seq(erpBlock(1), erpBlock(2))))
+    writeReport(dir, "b.TXT", ReportPipeline.renderReport(Seq(erpBlock(3))))
+    val listed = ReportPipeline.ingest(spark, dir.toString, generationDate = lit("2026-01-01 00:00:00"))
+    Files.delete(dir.resolve("b.TXT"))
+    val got = listed.collect()
+    assert(got.map(_.getAs[String]("ARCHIVO_PROCESADO")).sorted.toSeq === Seq("data_1.csv", "data_2.csv"))
+    assert(got.map(_.getAs[String]("RUTA_DE_REPORTE")).distinct.toSeq === Seq("file://" + dir.resolve("a.TXT")))
+    val onlyA = ReportPipeline.ingest(spark, dir.toString, generationDate = lit("2026-01-01 00:00:00")).collect()
+    assert(got.toSeq.map(_.toSeq).sortBy(_.toString) === onlyA.toSeq.map(_.toSeq).sortBy(_.toString))
   }
 
   test("UTF-8 BOM and CRLF line endings parse identically to a clean file") {

@@ -9,7 +9,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.datasources.text.TextFileFormat
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -28,7 +28,7 @@ class ReportRunSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     df.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
 
   /** Runs `body` (one `run`) and returns its result with the number of
-    * report files its Parquet append write opened: the text scans'
+    * report files its Parquet append write opened: the binaryFile scans'
     * `numFiles` in the executed plan of the write into `_attempt-*`. */
   private def withFilesOpened(body: => Long): (Long, Long) = {
     val writes = ArrayBuffer.empty[SparkPlan]
@@ -46,7 +46,7 @@ class ReportRunSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val plans = writes.synchronized(writes.toVector)
       assert(plans.size === 1, plans.mkString("\n"))
       val opened = collect(plans.head) {
-        case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[TextFileFormat] =>
+        case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[BinaryFileFormat] =>
           s.metrics("numFiles").value
       }
       assert(opened.size === 1, plans.head.toString)
