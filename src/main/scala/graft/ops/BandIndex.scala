@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** PERSISTED band-signature index with SUB-LINEAR ingest (q447, SURVEY
@@ -28,6 +28,14 @@ import org.apache.spark.sql.functions._
   * Every `compactEvery` generations the live rows are rewritten once and
   * tombstones cleared — classic LSM amortization: per-batch cost stays
   * O(batch) + O(corpus / compactEvery).
+  *
+  * Each generation is one sequential pass on the calling thread: reads,
+  * then writes, then commit ([[ingestSigs]]). No job outlives the call.
+  * The commit moves the staged delta into `rows/` and then writes
+  * `meta/gen-<n>`, which makes the generation current. A failure before
+  * the writes leaves every directory as it was. A failure during the
+  * writes leaves a `rows_in/` stage that a retry replaces. It can also
+  * leave `tombs/` and `ids/` appends, which are not staged yet.
   *
   * What still touches the index per batch, by design: (a) the candidate
   * join reads `rows/` BY KEY (band, band_sig) — on a cluster that table
@@ -65,9 +73,10 @@ object BandIndex {
     * frame — the storage layer is signature-family-agnostic (tombstones,
     * census, and compaction only ever touch doc_id/ver), so the SAME LSM
     * index serves minhash-banded text (q447) and hyperplane-bucketed
-    * vectors (q452). */
-  def seedSigs(spark: SparkSession, root: String, sigs: DataFrame): State =
-      LoopConf.withSizedCoalesce(spark) {
+    * vectors (q452). Two writes, then the meta file: `rows/`, then the
+    * `ids/` sidecar distilled from the written rows, whose write counts
+    * its own rows — that count is the census `nDocs`. */
+  def seedSigs(spark: SparkSession, root: String, sigs: DataFrame): State = {
     // a reused root must not leak state from a previous index life:
     // rows/ and ids/ are overwritten below, but stale meta/ files would
     // win readState's maxBy and stale tombs/ would kill fresh rows
@@ -75,22 +84,20 @@ object BandIndex {
     val f = fs(spark, root)
     Seq("meta", "tombs", "rows_in").foreach(d =>
       f.delete(new Path(s"$root/$d"), true))
-    val sig = sigs.withColumn("ver", lit(0L))
-    sig.write.mode(SaveMode.Overwrite).parquet(s"$root/rows")
-    // one distinct over the written rows feeds the sidecar write AND the
-    // census count — checkpointed so the census is not a third pass, and
-    // the two consumers run as concurrent jobs (one scheduler latency)
-    val ids = spark.read.parquet(s"$root/rows").select("doc_id").distinct()
-      .localCheckpoint(true)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val nF = Future { ids.count() }
-    ids.write.mode(SaveMode.Overwrite).parquet(s"$root/ids")
-    val st = State(0L, Await.result(nF, Duration.Inf), 0L)
+    sigs.withColumn("ver", lit(0L)).write.mode(SaveMode.Overwrite).parquet(s"$root/rows")
+    val nDocs = writeCounted(spark.read.parquet(s"$root/rows").select("doc_id").distinct(),
+      s"$root/ids", SaveMode.Overwrite)
+    val st = State(0L, nDocs, 0L)
     writeMeta(spark, root, st)
-    Checkpoints.release(ids)
     st
+  }
+
+  /** Write `df` as parquet at `path` and return the number of rows the
+    * write itself saw (`observe`, no separate count job). */
+  private def writeCounted(df: DataFrame, path: String, mode: SaveMode): Long = {
+    val written = Observation()
+    df.observe(written, count(lit(1)).as("n")).write.mode(mode).parquet(path)
+    written.get("n").asInstanceOf[Long]
   }
 
   // The generation metadata is THREE LONGS — writing it through a Spark
@@ -180,81 +187,66 @@ object BandIndex {
     * — and must touch only candidate ids, never the corpus. The storage
     * flow (append-only deltas, tombstones, incremental census,
     * compaction) is identical for every signature family.
+    *
+    * One generation is one sequential pass, in three phases:
+    *   1. reads — the candidate join against the index, `verify` and the
+    *      near-dup count, and the membership probe of the `ids/` sidecar;
+    *   2. writes — the delta into the `rows_in/` stage, then the
+    *      tombstones (re-ingest only) and the novel ids, whose write
+    *      counts its own rows (`novel`);
+    *   3. commit — [[commitDelta]] moves the stage into `rows/`, then the
+    *      `meta/gen-<n>` file makes the generation current.
+    * Every job has finished when this returns or throws. A failure in
+    * the reads leaves the index exactly as it was. A failure during the
+    * writes can leave this generation's `tombs/` and `ids/` appends in
+    * place (they are not staged yet); its `rows_in/` stage is replaced
+    * by a retry.
     */
   def ingestSigs(spark: SparkSession, root: String, batchSigs: DataFrame,
       verify: DataFrame => DataFrame, incoming: Long,
-      prev: Option[State] = None, compactEvery: Int = 8): IngestResult =
-      LoopConf.withSizedCoalesce(spark) {
+      prev: Option[State] = None, compactEvery: Int = 8): IngestResult = {
     val st = prev.getOrElse(readState(spark, root))
     val gen = st.gen + 1
-    val idx = read(spark, root)
-    // batch signatures feed the candidate join AND the delta — one build
+    // reads. Batch signatures feed the candidate join AND the delta —
+    // one build
     val bsig = batchSigs.localCheckpoint(true)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    // the delta write depends ONLY on the materialized bsig — start it
-    // now so its write IO overlaps the candidate/verify jobs below (the
-    // per-batch chain was 8 sequential job latencies; overlapping the
-    // independent ones cuts it to ~5). It lands in a STAGE dir
-    // (rows_in/, Overwrite) and is committed into rows/ by rename only
-    // after every read of this generation is done (commitDelta below):
-    // a reader can never list a half-committed delta, and a RETRIED
-    // generation (a crash after the stage or commit but before meta)
-    // overwrites the stage and replaces its own gen-files instead of
-    // appending duplicates with equal ver — which tombstones
-    // (ver < dead_below) could never kill (ADVICE r14).
-    // UPSERT = append-only: delta rows stamped with this generation; any
-    // REPLACED doc gets a tombstone killing its older generations. No
-    // index file is read or rewritten here (IncrementalIndexSpec asserts
-    // the delta plans scan nothing under the index root).
-    val rowsAppendF = Future {
-      bsig.withColumn("ver", lit(gen)).write.mode(SaveMode.Overwrite)
-        .parquet(s"$root/rows_in")
-    }
     // candidates: batch × index band collisions (self excluded: on
     // re-ingest the batch's own rows are already in the index)
-    val cand = bsig.join(idx.select(col("band"), col("band_sig"),
+    val cand = bsig.join(read(spark, root).select(col("band"), col("band_sig"),
         col("doc_id").as("id_ex")), Seq("band", "band_sig"))
       .filter(col("doc_id") =!= col("id_ex"))
       .select(col("doc_id"), col("id_ex")).dropDuplicates("doc_id", "id_ex")
       .localCheckpoint(true)
     val pairs = verify(cand)
-    // the three readout counts are INDEPENDENT jobs over already-
-    // materialized (or slim) inputs — submit them concurrently so the
-    // per-batch scheduler floor pays one latency, not three
-    val nearDupF = Future { pairs.select(col("doc_id")).distinct().count() }
-    val batchIds = bsig.select("doc_id").distinct()
+    val nearDup = pairs.select(col("doc_id")).distinct().count()
     // membership probe: batch ids (slim, broadcast) semi-join the ids
     // SIDECAR — a 1-column stream, no shuffle, and NOT the wide index
-    val batchDistinctF = Future { batchIds.count() }
-    val presentCnt = spark.read.parquet(s"$root/ids")
-      .join(broadcast(batchIds), Seq("doc_id"), "left_semi").count()
-    Await.result(rowsAppendF, Duration.Inf)
-    val idsAppendF = if (presentCnt > 0) Future {
-      // slow path (re-ingest): materialize the replaced ids once for the
-      // tombstone delta and the novel-ids anti-join
-      val presentIds = spark.read.parquet(s"$root/ids")
-        .join(broadcast(batchIds), Seq("doc_id"), "left_semi")
-        .localCheckpoint(true)
-      presentIds.withColumn("dead_below", lit(gen))
-        .write.mode(SaveMode.Append).parquet(s"$root/tombs")
-      batchIds.join(broadcast(presentIds), Seq("doc_id"), "left_anti")
-        .write.mode(SaveMode.Append).parquet(s"$root/ids")
-      Checkpoints.release(presentIds)
-    } else Future {
-      // fast path (pure append — the common ingest case): every batch id
-      // is novel, no tombstones
-      batchIds.write.mode(SaveMode.Append).parquet(s"$root/ids")
+    val batchIds = bsig.select("doc_id").distinct()
+    val probe = spark.read.parquet(s"$root/ids")
+      .join(broadcast(batchIds), Seq("doc_id"), "left_semi")
+    // slow path (re-ingest): materialize the replaced ids once for the
+    // tombstone delta and the novel-ids anti-join
+    val presentIds = if (probe.count() > 0) Some(probe.localCheckpoint(true)) else None
+    // writes. UPSERT = append-only: delta rows stamped with this
+    // generation; any REPLACED doc gets a tombstone killing its older
+    // generations. No write plan reads an index file (IncrementalIndexSpec
+    // asserts it). The delta lands in a STAGE dir (rows_in/, Overwrite):
+    // a reader never lists a half-committed delta, and a RETRIED
+    // generation overwrites the stage and replaces its own gen-files
+    // instead of appending duplicates with equal ver — which tombstones
+    // (ver < dead_below) could never kill (ADVICE r14).
+    bsig.withColumn("ver", lit(gen)).write.mode(SaveMode.Overwrite)
+      .parquet(s"$root/rows_in")
+    val novelIds = presentIds match {
+      case Some(p) =>
+        p.withColumn("dead_below", lit(gen))
+          .write.mode(SaveMode.Append).parquet(s"$root/tombs")
+        batchIds.join(broadcast(p), Seq("doc_id"), "left_anti")
+      case None => batchIds // fast path (pure append): every batch id is novel
     }
-    // census maintained incrementally — no full-index re-scan. The
-    // sidecar/tombstone appends overlap these awaits; everything is
-    // joined before the meta row commits the generation.
-    val novel = Await.result(batchDistinctF, Duration.Inf) - presentCnt
-    val nearDup = Await.result(nearDupF, Duration.Inf)
-    Await.result(idsAppendF, Duration.Inf)
-    // all reads of this generation are done — commit the staged delta
-    // into rows/ (idempotent per generation; see the stage comment)
+    // census maintained incrementally — no full-index re-scan
+    val novel = writeCounted(novelIds, s"$root/ids", SaveMode.Append)
+    // commit: the staged delta into rows/, then the meta file
     commitDelta(spark, root, gen)
     var next = State(gen, st.nDocs + novel, st.deltasSinceCompact + 1)
     if (next.deltasSinceCompact >= compactEvery) next = compact(spark, root, next)
@@ -262,7 +254,7 @@ object BandIndex {
     // pairs' plan reaches every checkpoint the verify closure made (vsh
     // for text, the candidate-vector fetch for vectors) — release via the
     // plan so the closure needs no lifecycle protocol of its own
-    Checkpoints.release(pairs); Checkpoints.release(bsig); Checkpoints.release(cand)
+    (Seq(pairs, bsig, cand) ++ presentIds).foreach(Checkpoints.release)
     IngestResult(incoming, nearDup, novel, next.nDocs, next)
   }
 

@@ -1065,49 +1065,28 @@ object GraphMiningOps {
   // ranking a procurement/recsys pipeline wants on interaction data.
   //
   // Scale: the edge list (distinct supplier→part) materializes once;
-  // each half-step is one equi-join + hash aggregate over it, with
-  // LAZY localCheckpoint lineage truncation per half-round. Lazy (not
-  // eager) is load-bearing twice over: the checkpoint flattens the
-  // logical plan to a LogicalRDD, so the hRaw/aRaw subtrees — each
-  // referenced TWICE (by the ppm renormalization AND its 1-row total) —
-  // don't double the plan per round (8 rounds of doubling = a 4^8 plan
-  // Catalyst cannot optimize; measured: the uncheckpointed form never
-  // finished at sf0.1); and eager=false collapses the 17 per-round
+  // each half-step joins it to the broadcast score grid, with a LAZY
+  // localCheckpoint of the authority frame per round. The checkpoint
+  // flattens the logical plan to a LogicalRDD, so the plan depth stays
+  // constant across rounds (measured: the uncheckpointed form never
+  // finished at sf0.1); lazy (not eager) collapses the per-round
   // checkpoint jobs into ONE final action whose shared shuffle stages
   // dedup at the RDD level (measured 14.9 s → 5.9 s at sf0.1).
-  /** Two execution regimes, identical results (the ppm fixed-point math
-    * is partition-invariant; GraphMiningSpec pins regime parity):
+  /** Score frames are |node|-row grids, so each half-step is ONE plan —
+    * e BHJ-joins the broadcast score frame (the edge list never
+    * shuffles), partial-aggregates map-side, and renormalizes via a
+    * window total over the grid — and the round costs exactly one
+    * broadcast-build job. Round-10 rebuild: the old equi-join form
+    * re-shuffled + re-sorted the edge list 16 times and ran 3
+    * broadcast-total jobs per round — the decade probe showed the wall
+    * was round scheduling, not data (6.4 s → ~2 s at sf0.1).
     *
-    * `broadcastScores = true` (default — the grid-sized regime): score
-    * frames are |node|-row grids, so each half-step is ONE plan — e
-    * BHJ-joins the broadcast score frame (the edge list never shuffles),
-    * partial-aggregates map-side, and renormalizes via a window total
-    * over the grid — and the round costs exactly one broadcast-build job.
-    * Round-10 rebuild: the old equi-join form re-shuffled + re-sorted the
-    * edge list 16 times and ran 3 broadcast-total jobs per round — the
-    * decade probe showed the wall was round scheduling, not data
-    * (6.4 s → ~2 s at sf0.1).
-    *
-    * `broadcastScores = false` (the huge-node-set regime, ~1e8+ nodes
-    * where a score frame outgrows broadcast AND a single-partition window
-    * total): per-round equi-joins shuffled on the node key with 1-row
-    * broadcast totals — every structure stays distributed; slower per
-    * round, unbounded in |nodes|.
-    *
-    * The loop body plans under shuffle.partitions = `roundPartitions`
-    * (restored on return; lazy localCheckpoint pins each round's plan at
-    * creation): per-round frames are |nodes| rows, never |edges|, so 32
-    * reduce tasks × 17 rounds was pure scheduling overhead at local[32].
-    * A cluster deploy lifts it to ~2-3× its executor cores.
-    *
-    * NOT THREAD-SAFE across a shared SparkSession: the loop scopes
-    * session-global conf (`spark.sql.shuffle.partitions`,
-    * `spark.sql.adaptive.enabled`) around plan CONSTRUCTION, so any
-    * concurrent planning on the same session during the scope would be
-    * built at 4 partitions with AQE off (results unaffected — only split
-    * counts and re-plan behavior). Same contract as
-    * [[graft.ops.StreamingOps.withStatePartitions]]; for concurrent use,
-    * plan on `spark.newSession()` (shared catalog, isolated conf).
+    * The loop body plans inside [[LoopConf.withNarrowShuffle]] (4
+    * shuffle partitions, AQE off, restored on return; lazy
+    * localCheckpoint pins each round's plan at creation): per-round
+    * frames are |nodes| rows, never |edges|, so 32 reduce tasks × 17
+    * rounds was pure scheduling overhead at local[32]. Not thread-safe
+    * across a shared SparkSession, for the reason that scope documents.
     *
     * Checkpoint lifecycle (CALLER contract): per-iteration frames are
     * lazily checkpointed and all stay reachable from the returned plan —
@@ -1116,8 +1095,7 @@ object GraphMiningOps {
     * session accumulates pinned blocks per call. Pinned by
     * CheckpointLifecycleSpec.
     */
-  def hits(edges: DataFrame, iters: Int, topK: Int,
-      roundPartitions: Int = 4, broadcastScores: Boolean = true): DataFrame = {
+  def hits(edges: DataFrame, iters: Int, topK: Int): DataFrame = {
     val spark = edges.sparkSession
     // the edge-list distinct + initial mass run BEFORE the scope at the
     // session's full shuffle width (they are |edges|-sized, the one
@@ -1134,48 +1112,30 @@ object GraphMiningOps {
     // bill (the partition counts are already pinned above; there is
     // nothing for AQE to adapt). [[LoopConf.withNarrowShuffle]] scopes
     // both confs and restores them on return.
-    LoopConf.withNarrowShuffle(spark, roundPartitions) {
+    LoopConf.withNarrowShuffle(spark) {
       // narrow (shuffle-free) merge down to the round width: 16 half-step
       // scans at 32 tasks each was launch overhead, not parallelism — the
-      // whole edge list fits a handful of in-memory partitions here. The
-      // huge-|edges| regime keeps e's native width (broadcastScores=false).
-      val eLoop = if (broadcastScores) e.coalesce(roundPartitions * 2) else e
+      // whole edge list fits a handful of in-memory partitions here
+      val eLoop = e.coalesce(LoopConf.Partitions * 2)
       var auth = parts.crossJoin(broadcast(np))
         .select(col("p"), expr("1000000L div k").as("a"))
         .localCheckpoint(false)
       feeders += auth
       for (_ <- 1 to iters) {
-        if (broadcastScores) {
-          // hub is deliberately NOT checkpointed: it is referenced exactly
-          // once (inside auth's broadcast build), and auth's own per-round
-          // checkpoint keeps the plan depth constant. (A fully lazy
-          // single-plan variant with shuffle-hash joins and no broadcasts
-          // was measured at 8.8 s — 16 re-shuffles of the edge list cost
-          // more than 16 grid-sized broadcast builds.)
-          val hub = eLoop.join(broadcast(auth), Seq("p"))
-            .groupBy(col("s")).agg(sum(col("a")).as("h0"))
-            .select(col("s"), expr("(1000000L * h0) div (sum(h0) over ())").as("h"))
-          auth = eLoop.join(broadcast(hub), Seq("s"))
-            .groupBy(col("p")).agg(sum(col("h")).as("a0"))
-            .select(col("p"), expr("(1000000L * a0) div (sum(a0) over ())").as("a"))
-            .localCheckpoint(false)
-          feeders += auth
-        } else {
-          val hRaw = e.join(auth, Seq("p"))
-            .groupBy(col("s")).agg(sum(col("a")).as("h0"))
-            .localCheckpoint(false)
-          feeders += hRaw
-          val hTot = hRaw.agg(sum(col("h0")).as("ht"))
-          val hub = hRaw.crossJoin(broadcast(hTot))
-            .select(col("s"), expr("(1000000L * h0) div ht").as("h"))
-          val aRaw = e.join(hub, Seq("s"))
-            .groupBy(col("p")).agg(sum(col("h")).as("a0"))
-            .localCheckpoint(false)
-          feeders += aRaw
-          val aTot = aRaw.agg(sum(col("a0")).as("at"))
-          auth = aRaw.crossJoin(broadcast(aTot))
-            .select(col("p"), expr("(1000000L * a0) div at").as("a"))
-        }
+        // hub is deliberately NOT checkpointed: it is referenced exactly
+        // once (inside auth's broadcast build), and auth's own per-round
+        // checkpoint keeps the plan depth constant. (A fully lazy
+        // single-plan variant with shuffle-hash joins and no broadcasts
+        // was measured at 8.8 s — 16 re-shuffles of the edge list cost
+        // more than 16 grid-sized broadcast builds.)
+        val hub = eLoop.join(broadcast(auth), Seq("p"))
+          .groupBy(col("s")).agg(sum(col("a")).as("h0"))
+          .select(col("s"), expr("(1000000L * h0) div (sum(h0) over ())").as("h"))
+        auth = eLoop.join(broadcast(hub), Seq("s"))
+          .groupBy(col("p")).agg(sum(col("h")).as("a0"))
+          .select(col("p"), expr("(1000000L * a0) div (sum(a0) over ())").as("a"))
+          .localCheckpoint(false)
+        feeders += auth
       }
       val result = auth.orderBy(col("a").desc, col("p")).limit(topK)
         .select(col("p").as("part"), col("a").as("authority_ppm"))

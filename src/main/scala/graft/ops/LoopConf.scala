@@ -5,18 +5,17 @@ import org.apache.spark.sql.SparkSession
 /** Shared narrow-shuffle scope for iterative operators whose per-round
   * frames are BOUNDED (a grid, a label table over a dimension-sized
   * vertex set) rather than data-sized: plans constructed inside the scope
-  * get `spark.sql.shuffle.partitions` = n and AQE off, so a loop of k
-  * rounds stops paying 32 reduce tasks × k × stages of pure scheduling
-  * overhead at local[32], and stops paying AQE's per-exchange re-plan
-  * bookkeeping on frames whose partition counts are already pinned
-  * (measured on q350 HITS: 5.8 s → 2.8 s at sf0.1; same effect on the
-  * q255 CC loop and q368's 25-row MM grid).
+  * get `spark.sql.shuffle.partitions` = [[Partitions]] and AQE off, so a
+  * loop of k rounds stops paying 32 reduce tasks × k × stages of pure
+  * scheduling overhead at local[32], and stops paying AQE's per-exchange
+  * re-plan bookkeeping on frames whose partition counts are already
+  * pinned (measured on q350 HITS: 5.8 s → 2.8 s at sf0.1; same effect on
+  * q255's DBSCAN assembly). Its two callers are q350 (HITS) and q255.
   *
   * Callers must (a) materialize every DATA-SIZED frame (edge lists,
   * posting streams) BEFORE entering the scope — eager localCheckpoint or
   * equivalent — and (b) only pass loops whose in-scope frames stay
-  * bounded at any corpus size, or keep n at the session width. A cluster
-  * deploy sizes n at ~2-3× its executor cores.
+  * bounded at any corpus size.
   *
   * NOT THREAD-SAFE across a shared SparkSession: the conf is
   * session-global, so any concurrent planning on the same session during
@@ -26,48 +25,20 @@ import org.apache.spark.sql.SparkSession
   * plan on `spark.newSession()` (shared catalog, isolated conf).
   */
 private[ops] object LoopConf {
-  def withNarrowShuffle[T](spark: SparkSession, n: Int)(body: => T): T = {
+  /** Shuffle partitions inside the scope. */
+  val Partitions = 4
+
+  def withNarrowShuffle[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val aqeKey = "spark.sql.adaptive.enabled"
     val prev = spark.conf.get(key)
     val prevAqe = spark.conf.get(aqeKey)
-    spark.conf.set(key, n.toString)
+    spark.conf.set(key, Partitions.toString)
     spark.conf.set(aqeKey, "false")
     try body
     finally {
       spark.conf.set(key, prev)
       spark.conf.set(aqeKey, prevAqe)
-    }
-  }
-
-  /** Size-based AQE partition coalescing scope (guide §2.2: size reduce
-    * partitions by BYTES, not by the core count): inside the scope AQE
-    * coalesces every post-shuffle stage down to `advisory`-sized
-    * partitions instead of stopping at the session parallelism
-    * (`parallelismFirst=false`). This is the right default for
-    * MULTI-ACTION operator chains over moderate frames — each action's
-    * reduce stages stop paying parallelism-many near-empty tasks of
-    * scheduling overhead (measured on the BandIndex ingest loop: q447
-    * 7.85 → 6.43 s warm-min at sf0.1), and at production sizes the same
-    * setting yields the guide's 64 MB-plus partitions. It is NOT set
-    * session-wide because iterative DataFrame loops with per-round
-    * actions (q82's CC propagation) measurably lose: their tiny round
-    * frames coalesce to one task and the rounds serialize (4.27 vs
-    * 2.10 s same-JVM). Same session-global thread-safety contract as
-    * [[withNarrowShuffle]].
-    */
-  def withSizedCoalesce[T](spark: SparkSession,
-      advisory: String = "64m")(body: => T): T = {
-    val pfKey = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    val adKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    val prevPf = spark.conf.get(pfKey)
-    val prevAd = spark.conf.get(adKey)
-    spark.conf.set(pfKey, "false")
-    spark.conf.set(adKey, advisory)
-    try body
-    finally {
-      spark.conf.set(pfKey, prevPf)
-      spark.conf.set(adKey, prevAd)
     }
   }
 }

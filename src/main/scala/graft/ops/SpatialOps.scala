@@ -241,8 +241,8 @@ object SpatialOps {
     // §8.28). Vertices with no core neighbor aren't labeled by the star
     // (no edge) — the coalesce(cluster, ck) below restores them, which
     // is why the starEscape singleton re-attach isn't needed here.
-    val assembled = LoopConf.withNarrowShuffle(spark, 4) {
-      val ccLabels = TextOps.connectedComponentsStarRdd(coreEdges, parts = 4)
+    val assembled = LoopConf.withNarrowShuffle(spark) {
+      val ccLabels = TextOps.connectedComponentsStarRdd(coreEdges, parts = LoopConf.Partitions)
         .select(col("id").as("ck"), col("label").as("cluster"))
       val coreLabels = core
         .join(ccLabels, Seq("ck"), "left")

@@ -1158,8 +1158,7 @@ object TextOps {
     * loop abandons its labels and restarts on [[connectedComponentsStar]]
     * (O(log² n) rounds on any graph) — same (id, label) contract.
     */
-  def connectedComponents(edges: DataFrame, maxPropagationRounds: Int = 5,
-      loopPartitions: Option[Int] = None): DataFrame = {
+  def connectedComponents(edges: DataFrame, maxPropagationRounds: Int = 5): DataFrame = {
     val e = edges.toDF("a", "b")
     // EAGER checkpoints in the propagation loop — measured both ways in
     // round 13: the lazy fuse-materialize-into-the-sum form saves one
@@ -1169,8 +1168,7 @@ object TextOps {
     // right-sized partitions — and q82 (data-sized vertex set, AQE on)
     // paid 4.7 s vs 3.0 s for it. Eager wins for DATA-SIZED loop frames
     // under AQE; the lazy fusion wins only inside a narrow-shuffle
-    // AQE-off scope, which is exactly where the star loop (q255's path,
-    // below) runs.
+    // AQE-off scope.
     val sym = e.union(e.select(col("b"), col("a"))) // positional union = swap
       .distinct()
       .localCheckpoint(true)
@@ -1189,11 +1187,7 @@ object TextOps {
     // high-diameter (q255's spatial ε-neighbor chains): go straight to
     // star contraction and skip the label-init job plus the propagation
     // rounds that would all be wasted before the escape fired
-    if (maxPropagationRounds <= 0)
-      return loopPartitions match {
-        case Some(n) => LoopConf.withNarrowShuffle(e.sparkSession, n)(starEscape())
-        case None => starEscape()
-      }
+    if (maxPropagationRounds <= 0) return starEscape()
     // initialize with the first propagation hop folded in: label =
     // min(id, neighbors) is exactly what round 1 would compute from
     // label = id, at the cost of one groupBy instead of a
@@ -1210,15 +1204,6 @@ object TextOps {
     var prevSum = labelSum(labels)
     var converged = false
     var rounds = 0
-    // loopPartitions: opt-in [[LoopConf.withNarrowShuffle]] scope for the
-    // propagation rounds — per-round frames are |vertices|-sized, so a
-    // caller whose vertex set is DIMENSION-bounded (q255: suppliers) can
-    // stop paying full-width reduce tasks × rounds of scheduling overhead.
-    // Callers with data-sized vertex sets (q82: documents) keep the
-    // default None — narrow rounds would serialize real work there. The
-    // |edges|-sized sym/init frames above are eager-checkpointed BEFORE
-    // this scope, at full width.
-    def loop(): DataFrame = {
     while (!converged) {
       rounds += 1
       if (rounds > maxPropagationRounds) {
@@ -1240,11 +1225,6 @@ object TextOps {
       labels = next
     }
     labels
-    }
-    loopPartitions match {
-      case Some(n) => LoopConf.withNarrowShuffle(e.sparkSession, n)(loop())
-      case None => loop()
-    }
   }
 
   /** Connected components by alternating large-star / small-star
@@ -1421,9 +1401,8 @@ object TextOps {
   /** pairs (id_a, id_b) → (doc_id, cluster, cluster_size): the q82 body,
     * factored out so specs can drive the full entry-point logic (incl. the
     * stalled-round escape to star contraction) with synthetic edge sets. */
-  def clusterPairs(pairs: DataFrame, maxPropagationRounds: Int = 5,
-      loopPartitions: Option[Int] = None): DataFrame = {
-    val labels = connectedComponents(pairs, maxPropagationRounds, loopPartitions)
+  def clusterPairs(pairs: DataFrame, maxPropagationRounds: Int = 5): DataFrame = {
+    val labels = connectedComponents(pairs, maxPropagationRounds)
     val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
     labels.join(broadcast(sizes), "label")
       .select(col("id").as("doc_id"), col("label").as("cluster"), col("cluster_size"))

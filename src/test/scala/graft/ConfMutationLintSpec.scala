@@ -4,42 +4,23 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-level ratchet: library code must not change a caller's
   * session-global conf as a side effect. A `conf.set(` (or `unset`,
-  * `setConfString`) in code under `src/main/scala` is allowed only in the
-  * files below, each still using a scoped swap that has no plan-local
-  * replacement yet. The list only shrinks: a new file fails the first
-  * test, and a listed file that no longer sets conf fails it too.
+  * `setConfString`, or the typed `SQLConf` setter `setConf(`) in code
+  * under `src/main/scala` is allowed only in the files below, each still
+  * using a scoped swap that has no plan-local replacement yet. The list
+  * only shrinks: a new file fails the first test, and a listed file that
+  * no longer sets conf fails it too.
   */
 class ConfMutationLintSpec extends AnyFunSuite {
 
   /** Path under src/main/scala/graft → why it still sets conf. */
   private val allowed = Map(
-    "ops/LoopConf.scala" -> "withNarrowShuffle/withSizedCoalesce swap shuffle-partition and AQE settings around a build",
+    "ops/LoopConf.scala" -> "withNarrowShuffle swaps shuffle-partition and AQE settings around a build",
     "ops/StreamingOps.scala" -> "state-partition, no-data-batch and state-store-provider scopes around a streaming query")
 
-  private val confMutation = """\bconf\.(?:set|unset|setConfString)\(""".r
-
-  /** 1-based numbers of the code lines in `text` that mutate conf; doc
-    * comments and `//` comments do not count. */
-  private def mutations(text: String): Seq[Int] =
-    text.linesIterator.zipWithIndex.collect {
-      case (ln, i) if !ln.trim.startsWith("*") && !ln.trim.startsWith("/*") &&
-          confMutation.findFirstIn(ln.split("//", 2)(0)).isDefined => i + 1
-    }.toSeq
-
-  private def sources(d: java.io.File): Seq[java.io.File] =
-    Option(d.listFiles()).toSeq.flatten.flatMap { f =>
-      if (f.isDirectory) sources(f)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    }
+  private val confMutation = """\bconf\.(?:set|unset|setConfString)\(|\bsetConf\(""".r
 
   test("only the allowlisted files set session conf in src/main/scala, and graft/ingest sets none") {
-    val root = new java.io.File("src/main/scala/graft")
-    val found = sources(root).flatMap { f =>
-      val text = new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8)
-      val rel = root.toPath.relativize(f.toPath).toString.replace('\\', '/')
-      mutations(text).map(n => s"$rel:$n")
-    }
+    val found = SourceLint.matches(new java.io.File("src/main/scala/graft"), confMutation)
     val files = found.map(_.takeWhile(_ != ':')).toSet
     assert(!files.exists(_.startsWith("ingest/")), found.mkString(", "))
     assert((files -- allowed.keySet).isEmpty, s"new conf mutation: ${found.mkString(", ")}")
@@ -56,8 +37,10 @@ class ConfMutationLintSpec extends AnyFunSuite {
         |  def f(s: SparkSession): Unit = s.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         |  def g(s: SparkSession): String = s.conf.get("spark.sql.shuffle.partitions")
         |  def h(s: SparkSession): Unit = s.sessionState.conf.setConfString("k", "v")
+        |  def i(s: SparkSession): Unit = s.sessionState.conf.setConf(SQLConf.ANSI_ENABLED, false)
+        |  def j(s: SparkSession): Boolean = s.sessionState.conf.getConf(SQLConf.ANSI_ENABLED)
         |}
         |""".stripMargin
-    assert(mutations(planted) === Seq(6, 8))
+    assert(SourceLint.codeLines(planted, confMutation) === Seq(6, 8, 9))
   }
 }

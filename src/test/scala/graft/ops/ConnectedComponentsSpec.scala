@@ -115,31 +115,6 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(labels.values.toSet === Set(0L))
   }
 
-  test("narrow loopPartitions yields identical labels and restores session conf") {
-    import spark.implicits._
-    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 20L))
-    val wide = TextOps.connectedComponents(edges.toDF("a", "b"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val key = "spark.sql.shuffle.partitions"
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevP = spark.conf.get(key)
-    val prevA = spark.conf.get(aqeKey)
-    val narrow = TextOps.connectedComponents(edges.toDF("a", "b"),
-        loopPartitions = Some(2))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    assert(narrow === wide)
-    assert(spark.conf.get(key) === prevP)
-    assert(spark.conf.get(aqeKey) === prevA)
-    // the star-contraction escape inside the narrow scope also restores
-    val chain = (0L until 20L).map(i => (i, i + 1))
-    val esc = TextOps.connectedComponents(chain.toDF("a", "b"),
-        maxPropagationRounds = 2, loopPartitions = Some(2))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(esc.forall(_._2 == 0L) && esc.length === 21)
-    assert(spark.conf.get(key) === prevP)
-    assert(spark.conf.get(aqeKey) === prevA)
-  }
-
   test("q82 entry path escapes a high-diameter chain to star contraction") {
     import spark.implicits._
     // diameter 29 >> maxPropagationRounds 2: min-label propagation cannot

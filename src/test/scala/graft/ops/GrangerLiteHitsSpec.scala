@@ -63,18 +63,4 @@ class GrangerLiteHitsSpec extends SparkSpec {
     // p10 has in-degree 3 incl. the strongest hub -> must rank first
     assert(got.head._1 === 10L)
   }
-
-  test("q350 HITS: broadcast and shuffle-join regimes agree on real data") {
-    // the ppm fixed-point recurrence is partition-invariant, so the
-    // grid-sized regime (broadcast score frames + window totals, the
-    // round-10 default) and the huge-node-set regime (shuffled equi-joins
-    // + 1-row broadcast totals) must produce byte-identical rankings
-    val edges = graft.Tables.lineitem(spark, "/root/testdata/sf0.001")
-      .select(org.apache.spark.sql.functions.col("l_suppkey"),
-        org.apache.spark.sql.functions.col("l_partkey")).distinct()
-    def run(bc: Boolean) =
-      GraphMiningOps.hits(edges, iters = 8, topK = 10, broadcastScores = bc)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(run(true) === run(false))
-  }
 }

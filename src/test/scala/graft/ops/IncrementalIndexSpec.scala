@@ -196,6 +196,59 @@ class IncrementalIndexSpec extends SparkSpec {
     BandIndex.deleteRoot(spark, root)
   }
 
+  test("a generation whose verify fails leaves the index as it was; its retry matches an uninterrupted run") {
+    // the failing verify's frame throws only when it runs. Every job of
+    // the call must be over when the exception arrives, and no write of
+    // the failed generation may land: a leaked ids/ append makes the
+    // retry see its own batch as present (novel 0, census too low)
+    graft.functions.CosineSimilarity.register(spark)
+    val corpus = VectorOps.plantedTwinCorpus(spark, dir)
+      .withColumn("batch", expr(VectorOps.viBatchExpr)).localCheckpoint(true)
+    val verify = VectorOps.cosineVerify(corpus, 0.9) _
+    val boom = udf((id: Long) => {
+      if (id >= 0L) throw new IllegalStateException(s"verify failed on $id"); id
+    })
+    val failing = (cand: org.apache.spark.sql.DataFrame) =>
+      cand.withColumn("doc_id", boom(col("doc_id")))
+    val sig0 = VectorOps.vecSignatures(spark, corpus.filter(col("batch") === 0))
+    // batches 0 and 1: a re-ingest, so the tombstone path runs as well
+    val mixed = VectorOps.vecSignatures(spark, corpus.filter(col("batch") <= 1))
+    val root = java.nio.file.Files.createTempDirectory("graft_idx_failed").toString
+    val ref = java.nio.file.Files.createTempDirectory("graft_idx_clean").toString
+    val st0 = BandIndex.seedSigs(spark, root, sig0)
+    def listing() = Seq("rows", "ids", "tombs", "meta").map(d =>
+      d -> Option(new java.io.File(s"$root/$d").list()).map(_.toSet).getOrElse(Set.empty[String])).toMap
+    val before = listing()
+    intercept[Exception] {
+      BandIndex.ingestSigs(spark, root, mixed, failing, incoming = 0L, prev = Some(st0))
+    }
+    // no active job for 20 polls in a row, within 60 s
+    val tracker = spark.sparkContext.statusTracker
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    var idle = 0
+    while (idle < 20 && System.nanoTime() < deadline) {
+      idle = if (tracker.getActiveJobIds.isEmpty) idle + 1 else 0
+      Thread.sleep(50)
+    }
+    assert(idle === 20, s"jobs still active after the failure: ${tracker.getActiveJobIds.mkString(",")}")
+    assert(listing() === before, "the failed generation wrote into the index")
+    val retry = BandIndex.ingestSigs(spark, root, mixed, verify, incoming = 0L, prev = Some(st0))
+    val clean = BandIndex.ingestSigs(spark, ref, mixed, verify, incoming = 0L,
+      prev = Some(BandIndex.seedSigs(spark, ref, sig0)))
+    // the uninterrupted run confirms near-dups, so the candidate frame
+    // the failing verify got had rows to throw on
+    assert(clean.nearDup > 0L)
+    assert((retry.state.gen, retry.state.nDocs) === ((clean.state.gen, clean.state.nDocs)))
+    assert(retry.novel === clean.novel)
+    val got = BandIndex.read(spark, root)
+    val want = BandIndex.read(spark, ref)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+      "the retried generation's index differs from an uninterrupted run")
+    Checkpoints.releaseAll(spark)
+    BandIndex.deleteRoot(spark, root)
+    BandIndex.deleteRoot(spark, ref)
+  }
+
   test("re-seeding a used root clears stale meta, tombstones and stage") {
     // ADVICE r14: seedSigs over a previously used root left higher-gen
     // meta files that win readState's maxBy, and stale tombs that kill
