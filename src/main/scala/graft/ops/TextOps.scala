@@ -1183,11 +1183,6 @@ object TextOps {
         .join(star, Seq("id"), "left")
         .select(col("id"), coalesce(col("label"), col("id")).as("label"))
     }
-    // maxPropagationRounds <= 0 = the caller KNOWS the graph is
-    // high-diameter (q255's spatial ε-neighbor chains): go straight to
-    // star contraction and skip the label-init job plus the propagation
-    // rounds that would all be wasted before the escape fired
-    if (maxPropagationRounds <= 0) return starEscape()
     // initialize with the first propagation hop folded in: label =
     // min(id, neighbors) is exactly what round 1 would compute from
     // label = id, at the cost of one groupBy instead of a

@@ -8,14 +8,19 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** q447's persisted band-signature index (BandIndex): the maintenance
-  * contract a growing corpus needs — ingest WRITE IO O(batch) (append +
+  * contract a growing corpus needs — ingest WRITE IO O(batch) (delta +
   * tombstone, never a full-index rewrite — the round-13 `weak`),
   * idempotent re-ingest, census maintained incrementally, candidates
-  * generated against the INDEX rather than the corpus. */
+  * generated against the INDEX rather than the corpus, and a generation
+  * killed before its meta commit left invisible. */
 class IncrementalIndexSpec extends SparkSpec {
   import spark.implicits._
 
   private val dir = "/root/testdata/sf0.001"
+
+  /** The `ver=<n>` directories of one index part. */
+  private def verDirs(root: String, part: String): Set[String] =
+    Option(new java.io.File(s"$root/$part").list()).toSet.flatten.filter(_.startsWith("ver="))
 
   test("re-ingesting the same batch is idempotent on the index") {
     val root = java.nio.file.Files.createTempDirectory("graft_idx_spec").toString
@@ -172,8 +177,8 @@ class IncrementalIndexSpec extends SparkSpec {
   test("a RETRIED generation replaces its own delta instead of duplicating it") {
     // ADVICE r14: a crash after the delta lands but before the meta
     // commit makes a retry reuse the same gen; equal-ver duplicates can
-    // never be killed by tombstones (ver < dead_below). The staged
-    // commit must make the retry overwrite its own gen-files.
+    // never be killed by tombstones (only rows older than the tomb die).
+    // The retry must overwrite its own ver=<n> directories.
     val root = java.nio.file.Files.createTempDirectory("graft_idx_retry").toString
     val corpus = VectorOps.plantedTwinCorpus(spark, dir)
       .withColumn("batch", expr(VectorOps.viBatchExpr))
@@ -249,10 +254,71 @@ class IncrementalIndexSpec extends SparkSpec {
     BandIndex.deleteRoot(spark, ref)
   }
 
+  test("a generation killed at any step before its meta commit is invisible; its retry matches an uninterrupted run") {
+    // each case kills a re-ingest generation (batches 0 and 1: the
+    // tombstone and the novel-ids paths both run) by failing one file
+    // write part-way (KillFs), then may plant what a kill inside a job
+    // commit leaves: a part file still under _temporary, missing from
+    // its ver=<n> directory
+    graft.functions.CosineSimilarity.register(spark)
+    spark.sparkContext.hadoopConfiguration.set("fs.killfs.impl", classOf[KillFs].getName)
+    val corpus = VectorOps.plantedTwinCorpus(spark, dir)
+      .withColumn("batch", expr(VectorOps.viBatchExpr)).localCheckpoint(true)
+    val verify = VectorOps.cosineVerify(corpus, 0.9) _
+    val sig0 = VectorOps.vecSignatures(spark, corpus.filter(col("batch") === 0))
+    val mixed = VectorOps.vecSignatures(spark, corpus.filter(col("batch") <= 1))
+    val ref = java.nio.file.Files.createTempDirectory("graft_idx_clean").toString
+    val refSt0 = BandIndex.seedSigs(spark, ref, sig0)
+    val seeded = BandIndex.read(spark, ref).localCheckpoint(true)
+    val clean = BandIndex.ingestSigs(spark, ref, mixed, verify, incoming = 0L, prev = Some(refSt0))
+    val want = BandIndex.read(spark, ref)
+    assert(clean.nearDup > 0L && clean.novel > 0L)
+    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    def strandPart(local: String): Unit = Seq("rows", "tombs", "ids").foreach { part =>
+      val gen1 = new java.io.File(s"$local/$part/ver=1")
+      val stranded = new java.io.File(gen1, "_temporary/0/task_0")
+      stranded.mkdirs()
+      val part0 = gen1.listFiles().filter(_.getName.endsWith(".parquet")).minBy(_.getName)
+      java.nio.file.Files.move(part0.toPath, new java.io.File(stranded, part0.getName).toPath)
+      new java.io.File(gen1, "_SUCCESS").delete()
+    }
+    // (case, fault path, bytes kept, plant, parts whose ver=1 holds a part file)
+    val kills = Seq[(String, String, Int, String => Unit, Set[String])](
+      ("after the rows/ write", "/tombs/", 0, _ => (), Set("rows")),
+      ("after the tombs/ write", "/ids/", 0, _ => (), Set("rows", "tombs")),
+      ("after the ids/ write", "/meta/", 0, _ => (), Set("rows", "tombs", "ids")),
+      ("inside a job commit", "/meta/", 0, strandPart, Set("rows", "tombs", "ids")),
+      ("inside the meta write", "/meta/", 3, _ => (), Set("rows", "tombs", "ids")))
+    kills.foreach { case (at, fault, keep, plant, written) =>
+      val local = java.nio.file.Files.createTempDirectory("graft_idx_kill").toString
+      val root = s"killfs://$local"
+      val st0 = BandIndex.seedSigs(spark, root, sig0)
+      KillFs.arm(fault, keep)
+      intercept[Exception] {
+        BandIndex.ingestSigs(spark, root, mixed, verify, incoming = 0L, prev = Some(st0))
+      }
+      assert(KillFs.fired, s"$at: the fault never fired")
+      assert(Seq("rows", "tombs", "ids").filter(p => Option(new java.io.File(s"$local/$p/ver=1")
+        .list()).exists(_.exists(_.endsWith(".parquet")))).toSet === written, at)
+      plant(local)
+      assert(BandIndex.readState(spark, root) === st0, s"$at: the killed generation committed")
+      assert(same(BandIndex.read(spark, root), seeded), s"$at: the killed generation is visible")
+      val retry = BandIndex.ingestSigs(spark, root, mixed, verify, incoming = 0L, prev = Some(st0))
+      assert((retry.state.gen, retry.state.nDocs) === ((clean.state.gen, clean.state.nDocs)), at)
+      assert((retry.novel, retry.nearDup) === ((clean.novel, clean.nearDup)), at)
+      assert(same(BandIndex.read(spark, root), want), s"$at: the retry's index differs")
+      BandIndex.deleteRoot(spark, root)
+    }
+    Checkpoints.releaseAll(spark)
+    BandIndex.deleteRoot(spark, ref)
+  }
+
   test("re-seeding a used root clears stale meta, tombstones and stage") {
     // ADVICE r14: seedSigs over a previously used root left higher-gen
     // meta files that win readState's maxBy, and stale tombs that kill
-    // fresh rows
+    // fresh rows. The stage is now an uncommitted generation's ver=<n>
+    // directory, planted here as a copy of generation 1's delta
     val root = java.nio.file.Files.createTempDirectory("graft_idx_reseed").toString
     val corpus = VectorOps.plantedTwinCorpus(spark, dir)
       .withColumn("batch", expr(VectorOps.viBatchExpr))
@@ -263,15 +329,19 @@ class IncrementalIndexSpec extends SparkSpec {
     // two ingests, the second re-ingesting the first: tombstones + gen-2 meta exist
     val r1 = BandIndex.ingestSigs(spark, root, sig1, noPairs, incoming = 0L, prev = Some(st0))
     BandIndex.ingestSigs(spark, root, sig1, noPairs, incoming = 0L, prev = Some(r1.state))
-    assert(BandIndex.parquetDirExists(spark, s"$root/tombs"))
+    assert(verDirs(root, "tombs").nonEmpty)
+    val stale = new java.io.File(s"$root/rows/ver=3")
+    stale.mkdirs()
+    new java.io.File(s"$root/rows/ver=1").listFiles().filter(_.getName.endsWith(".parquet"))
+      .foreach(f => java.nio.file.Files.copy(f.toPath, new java.io.File(stale, f.getName).toPath))
     // re-seed the same root from batch 0 only
     val reseeded = BandIndex.seedSigs(spark, root,
       VectorOps.vecSignatures(spark, corpus.filter(col("batch") === 0)))
     assert(reseeded.gen == 0L)
     assert(BandIndex.readState(spark, root).gen == 0L,
       "stale higher-gen meta file still wins readState after re-seed")
-    assert(!BandIndex.parquetDirExists(spark, s"$root/tombs"),
-      "stale tombstones survive a re-seed")
+    assert(verDirs(root, "tombs").isEmpty, "stale tombstones survive a re-seed")
+    assert(verDirs(root, "rows") === Set("ver=0"), "a stale generation survives a re-seed")
     val live = BandIndex.read(spark, root).select("doc_id").distinct().count()
     assert(live == reseeded.nDocs)
     Checkpoints.releaseAll(spark)
@@ -292,20 +362,24 @@ class IncrementalIndexSpec extends SparkSpec {
     val docs = graft.Tables.documents(spark, dir).withColumn("batch",
       expr("cast(conv(substring(md5(concat('batch:', cast(doc_id as string))), 1, 4), 16, 10) as bigint) % 4"))
     val st0 = BandIndex.seed(spark, root, docs.filter(col("batch") === 0))
-    // two ingests, the second re-ingesting the first (tombstones exist),
-    // with compactEvery=2 so the second ingest triggers compaction
+    // eight ingests, the later ones re-ingesting the first (tombstones
+    // exist); compaction runs every 8 generations, so the eighth
+    // triggers it
     val b1 = docs.filter(col("batch") === 1)
-    val r1 = BandIndex.ingest(spark, root, b1, docs, prev = Some(st0), compactEvery = 2)
+    val r1 = BandIndex.ingest(spark, root, b1, docs, prev = Some(st0))
     val liveBefore = BandIndex.read(spark, root)
       .select("doc_id", "band", "band_sig").localCheckpoint(true)
-    val r2 = BandIndex.ingest(spark, root, b1, docs, prev = Some(r1.state), compactEvery = 2)
-    assert(r2.state.deltasSinceCompact == 0L, "compaction did not trigger")
-    assert(!BandIndex.parquetDirExists(spark, s"$root/tombs"),
-      "compaction left tombstones behind")
+    val r7 = (2 to 7).foldLeft(r1) { (r, _) =>
+      BandIndex.ingest(spark, root, b1, docs, prev = Some(r.state))
+    }
+    assert(r7.state.deltasSinceCompact == 7L && verDirs(root, "tombs").nonEmpty)
+    val r8 = BandIndex.ingest(spark, root, b1, docs, prev = Some(r7.state))
+    assert(r8.state.deltasSinceCompact == 0L, "compaction did not trigger")
+    assert(verDirs(root, "tombs").isEmpty, "compaction left tombstones behind")
     val liveAfter = BandIndex.read(spark, root).select("doc_id", "band", "band_sig")
     assert(liveAfter.exceptAll(liveBefore).isEmpty && liveBefore.exceptAll(liveAfter).isEmpty,
       "compaction changed live index content")
-    assert(r2.indexDocs == r1.indexDocs)
+    assert(r8.indexDocs == r1.indexDocs)
     Checkpoints.releaseAll(spark)
     BandIndex.deleteRoot(spark, root)
   }
