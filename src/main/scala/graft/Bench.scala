@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: every SparkEntry query timed at
@@ -48,7 +49,12 @@ object Bench {
       .filter { case (name, _) =>
         prefixes.isEmpty || prefixes.exists(name.startsWith) }
       .map { case (name, fn) =>
+      // classes Janino compiled during each timed run: a later run that
+      // still compiles thrashes the codegen cache or inlines a per-call
+      // literal into generated code
+      val compiles = scala.collection.mutable.ArrayBuffer.empty[Long]
       def once(): Double = {
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).count(); true }
@@ -58,6 +64,7 @@ object Bench {
             false
           }
         val dt = (System.nanoTime() - t0) / 1e9
+        compiles += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
         // free the run's localCheckpoint blocks (untimed): without this
         // sweep a full 440-query run accumulates hundreds of pinned RDDs
         // in the shared JVM and unrelated queries inflate 3-20x under the
@@ -73,11 +80,14 @@ object Bench {
         else if (math.min(a, b) > 1.0) Seq(a, b, once()).filter(_ >= 0)
         else Seq(a, b)
       val failed = a < 0 || b < 0 || runs.size < 2
-      name -> (if (failed) (-1.0, runs) else (runs.min, runs))
+      name -> (if (failed) -1.0 else runs.min, runs, compiles.toSeq)
     }
-    val results = timed.map { case (name, (best, _)) => name -> best }
-    val runsJson = timed.collect { case (name, (best, runs)) if best >= 0 =>
+    val results = timed.map { case (name, (best, _, _)) => name -> best }
+    val runsJson = timed.collect { case (name, (best, runs, _)) if best >= 0 =>
       "\"" + name + "\":" + runs.map(num(_, 4)).mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    val compilesJson = timed.collect { case (name, (_, _, cs)) if cs.exists(_ > 0) =>
+      "\"" + name + "\":" + cs.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     // failures are reported by NAME, never as numeric sentinels mixed
     // into the timing map (a -1.0 in the map poisons totals and parsers)
@@ -107,9 +117,11 @@ object Bench {
       if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
       // "queries" stays the per-query MIN (what benchdiff ratios compare);
       // "runs" carries every timed execution so the reader can separate
-      // plan regressions from host noise inside the artifact itself
+      // plan regressions from host noise inside the artifact itself;
+      // "compiles" holds the per-run compile counts of each query that
+      // compiled at all, failed runs included
       val full =
-        s"""{"metric":"total","value":$totalR,"unit":"sec","n_queries":${results.size},"queries":$qs,"runs":$runsJson,"failed":$failed,"sf":"$sfDir"}"""
+        s"""{"metric":"total","value":$totalR,"unit":"sec","n_queries":${results.size},"queries":$qs,"runs":$runsJson,"compiles":$compilesJson,"failed":$failed,"sf":"$sfDir"}"""
       java.nio.file.Files.writeString(p, full + "\n")
     } catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")

@@ -14,6 +14,17 @@ import org.apache.spark.sql.SparkSession
   * - nanosAsLong so TIMESTAMP(NANOS) parquet (e.g. the events table) reads
   *   instead of throwing.
   * - graft extensions (cosine_sim et al.) injected session-wide.
+  * - a generated-code cache of 1000 classes
+  *   (`spark.sql.codegen.cache.maxEntries`, a static conf that Spark reads
+  *   once per JVM, when it first generates code). The cache maps generated
+  *   Java source to its compiled class, so a plan whose code was seen
+  *   before skips Janino and reuses JIT-warm bytecode. One curation pass
+  *   (q37, q40, q110, q452 at sf0.01) generates 185 distinct bodies, 104 of
+  *   them from q452, whose BandIndex generations each inline their own
+  *   `ver <= n` and `batch === b` literals. Spark's default of 100 evicts
+  *   them before the next pass, which then recompiles 179 classes; 256
+  *   already holds a pass, and 1000 leaves room for the larger catalog
+  *   operators.
   */
 object GraftSession {
 
@@ -26,6 +37,7 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       // a noisy-neighbor host can stall a small broadcast past the 300s
       // default and fail an otherwise-healthy job (observed once in CI);
       // the collect-side size limits still bound the broadcast itself

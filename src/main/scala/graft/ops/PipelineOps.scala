@@ -945,15 +945,6 @@ object PipelineOps {
       .select(col("akey"), col("bkey"), col("lev"))
   }
 
-  /** Round-3 coarse-blocked candidates ((nk, seg) blocks, lev ≤ 3) — kept
-    * ONLY as the spec's brute-force twin for the invariance proof; the
-    * O(n²/|blocks|) growth is why it is not the shipped path. */
-  private[ops] def coarseCandidates(clean: DataFrame, dirty: DataFrame): DataFrame =
-    clean.join(dirty, Seq("nk", "seg"))
-      .withColumn("lev", expr("levenshtein(an, bn, 3)"))
-      .filter(col("lev") >= 0)
-      .select(col("akey"), col("bkey"), col("lev"))
-
   /** Mutual-best 1:1 assignment over (akey, bkey, lev) candidates. */
   private[ops] def mutualBestAssignment(candIn: DataFrame): DataFrame = {
     // both argmin sides read the candidate set — materialize it once

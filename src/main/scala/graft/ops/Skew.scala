@@ -35,20 +35,6 @@ object Skew {
       .drop("__salt")
   }
 
-  /** Two-phase aggregation for skewed group keys: partial-aggregate on
-    * (key, salt) first, then final-aggregate on key. Spark's hash aggregate
-    * already does map-side partials; this adds a REDUCE-side split for keys
-    * whose partial streams still overwhelm one reducer.
-    * `aggs` must be re-aggregatable (sum/count/min/max).
-    */
-  def saltedSum(df: DataFrame, key: String, valueCol: String, salts: Int): DataFrame =
-    df.withColumn("__salt",
-        pmod(xxhash64(df.columns.map(col): _*), lit(salts.toLong)).cast("int"))
-      .groupBy(col(key), col("__salt"))
-      .agg(sum(col(valueCol)).as("__partial"))
-      .groupBy(col(key))
-      .agg(sum(col("__partial")).as(s"sum_$valueCol"))
-
   // --------------------------------------------------------------------------
   // q123 — the salted equi-join as a CATALOG operator, not just a
   // spec-tested utility: orders ⋈ customer through saltedEquiJoin (the

@@ -3,15 +3,11 @@ package graft.ops
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.DecimalType
 
 /** Typed event row for the stateful streaming operators. */
 case class EventRow(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
                     event_type: String, value: Double)
-
-/** Per-user running aggregate state/output for flatMapGroupsWithState. */
-case class UserAgg(user_id: Long, n: Long, total: Double)
 
 /** Typed document row for the streaming band-index front door. */
 case class DocRow(doc_id: Long, text: String)
@@ -146,36 +142,6 @@ object StreamingOps {
   def withWatermark10m(events: DataFrame): DataFrame =
     events.withWatermark("ts", "10 minutes")
 
-  /** Stream-static enrichment: join a stream against a (small) dimension.
-    * The dimension is broadcast to every micro-batch — no stream-side
-    * shuffle, no state; the dimension is re-resolvable per batch so slowly
-    * changing dims pick up updates. This is THE shape for enriching a
-    * 100 TB/day event stream with reference data.
-    */
-  def enrichWithDim(events: DataFrame, dim: DataFrame, key: String): DataFrame =
-    events.join(broadcast(dim), Seq(key), "left")
-
-  /** Custom streaming state: cumulative per-user count/total, emitted on
-    * every update (KeyValueGroupedDataset.flatMapGroupsWithState — the
-    * SURVEY §2.2 stateful-processing surface). State is per-key and
-    * checkpointable; at scale the shuffle key is user_id and state size is
-    * O(|users|).
-    */
-  def runningUserTotals(ds: Dataset[EventRow]): Dataset[UserAgg] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[EventRow], state: GroupState[UserAgg]) =>
-          val prev = state.getOption.getOrElse(UserAgg(uid, 0L, 0.0))
-          var n = prev.n
-          var tot = prev.total
-          rows.foreach { r => n += 1; tot += r.value }
-          val next = UserAgg(uid, n, tot)
-          state.update(next)
-          Iterator(next)
-      }
-  }
-
   // -------------------------- batch twins (driver contract) ----------------
 
   def q60Tumbling(spark: SparkSession, dir: String): DataFrame =
@@ -245,29 +211,6 @@ object StreamingOps {
     """SELECT event_type, COUNT(*) AS n,
       |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
-
-  /** Incremental corpus dedup, written once for batch AND streaming: drop
-    * incoming docs whose content hash already exists in the static corpus
-    * (stream-static LEFT ANTI join — the corpus side is a static
-    * DataFrame the planner can broadcast or shuffle per micro-batch),
-    * then keep only the FIRST arrival of each new hash (stateful
-    * dropDuplicates; bound state with a watermark upstream when the
-    * stream is event-timed). This is the streaming front door for q111's
-    * exact pass: the same lineage runs under MemoryStream in
-    * StreamingSpec and on plain DataFrames in batch.
-    *
-    * DETERMINISM: "first arrival wins" is well-defined only ACROSS
-    * micro-batches. When two docs with the same new hash land in the SAME
-    * micro-batch (or the op runs in batch mode), dropDuplicates keeps a
-    * partition-order-dependent row — callers needing a stable winner must
-    * resolve in-batch ties upstream (e.g. aggregate min(doc_id) per hash
-    * per batch in foreachBatch); q111's batch catalog twin does exactly
-    * that with its own deterministic aggregate.
-    */
-  def dedupAgainstCorpus(incoming: DataFrame, corpusHashes: DataFrame): DataFrame =
-    incoming.withColumn("h", md5(col("text")))
-      .join(corpusHashes, Seq("h"), "left_anti")
-      .dropDuplicates("h")
 
   /** q122 — file-stream END-TO-END: unlike q60–q63 (batch twins of the
     * streaming transforms), this entry EXECUTES a real Structured
@@ -1128,7 +1071,7 @@ case class SessionAcc(user_id: Long, start_us: Long, end_us: Long,
   */
 class SessionTimerProcessor(gapUs: Long)
     extends org.apache.spark.sql.streaming.StatefulProcessor[Long, EventRow, SessionAcc] {
-  import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TimeMode, TimerValues, TTLConfig, ValueState}
+  import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
 
   @transient private var state: ValueState[SessionAcc] = _
 

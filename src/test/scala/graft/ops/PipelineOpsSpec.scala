@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class PipelineOpsSpec extends SparkSpec {
@@ -419,7 +420,7 @@ class PipelineOpsSpec extends SparkSpec {
       .mutualBestAssignment(PipelineOps.neighborhoodCandidates(clean, dirty))
       .collect().map(_.toSeq).toSet
     val viaCoarse = PipelineOps
-      .mutualBestAssignment(PipelineOps.coarseCandidates(clean, dirty))
+      .mutualBestAssignment(PipelineOpsSpec.coarseCandidates(clean, dirty))
       .collect().map(_.toSeq).toSet
     assert(viaNeighborhood === viaCoarse)
     // scale property: neighborhood candidates are O(n) (each name's bucket
@@ -479,4 +480,16 @@ class PipelineOpsSpec extends SparkSpec {
     val sim2 = out.map(_.getAs[Double]("sim")).sum / 200
     assert(sim2 >= sim0 - 1e-9, s"iterating degraded fit: $sim0 -> $sim2")
   }
+}
+
+object PipelineOpsSpec {
+
+  /** Coarse-blocked candidates ((nk, seg) blocks, lev ≤ 3): the brute-force
+    * twin of `PipelineOps.neighborhoodCandidates` for the invariance proof;
+    * the O(n²/|blocks|) growth is why it is not the shipped path. */
+  def coarseCandidates(clean: DataFrame, dirty: DataFrame): DataFrame =
+    clean.join(dirty, Seq("nk", "seg"))
+      .withColumn("lev", expr("levenshtein(an, bn, 3)"))
+      .filter(col("lev") >= 0)
+      .select(col("akey"), col("bkey"), col("lev"))
 }

@@ -3,9 +3,10 @@ package graft.ops
 import java.sql.Timestamp
 
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Drives the StreamingOps transforms under real Structured Streaming via
   * MemoryStream: batch/stream agreement, watermark late-data semantics,
@@ -86,7 +87,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val dim = Seq((1L, "gold"), (2L, "basic")).toDF("user_id", "segment")
     val stream = MemoryStream[EventRow]
-    val q = StreamingOps.enrichWithDim(stream.toDF(), dim, "user_id")
+    val q = StreamingSpec.enrichWithDim(stream.toDF(), dim, "user_id")
       .writeStream.format("memory").queryName("enrich_out")
       .outputMode(OutputMode.Append).start()
     try {
@@ -106,7 +107,7 @@ class StreamingSpec extends SparkSpec {
     val corpus = Seq("old text a", "old text b").toDF("text")
       .select(org.apache.spark.sql.functions.md5($"text").as("h"))
     val stream = MemoryStream[(Long, String)]
-    val q = StreamingOps.dedupAgainstCorpus(
+    val q = StreamingSpec.dedupAgainstCorpus(
         stream.toDF().toDF("doc_id", "text"), corpus)
       .writeStream.format("memory").queryName("corpus_dedup_out")
       .outputMode(OutputMode.Append).start()
@@ -142,7 +143,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[EventRow]
-    val q = StreamingOps.runningUserTotals(stream.toDS())
+    val q = StreamingSpec.runningUserTotals(stream.toDS())
       .writeStream.format("memory").queryName("state_out")
       .outputMode(OutputMode.Update).start()
     try {
@@ -423,4 +424,51 @@ class StreamingSpec extends SparkSpec {
     BandIndex.deleteRoot(spark, rootBatch)
     BandIndex.deleteRoot(spark, rootStream)
   }
+}
+
+/** Per-user running aggregate state/output for flatMapGroupsWithState. */
+case class UserAgg(user_id: Long, n: Long, total: Double)
+
+/** Streaming shapes that no catalog operator uses; the spec drives each
+  * under MemoryStream. */
+object StreamingSpec {
+
+  /** Stream-static enrichment: join a stream against a (small) dimension.
+    * The dimension is broadcast to every micro-batch — no stream-side
+    * shuffle, no state; the dimension is re-resolvable per batch so slowly
+    * changing dims pick up updates.
+    */
+  def enrichWithDim(events: DataFrame, dim: DataFrame, key: String): DataFrame =
+    events.join(broadcast(dim), Seq(key), "left")
+
+  /** Custom streaming state: cumulative per-user count/total, emitted on
+    * every update (KeyValueGroupedDataset.flatMapGroupsWithState). State is
+    * per-key and checkpointable; state size is O(|users|).
+    */
+  def runningUserTotals(ds: Dataset[EventRow]): Dataset[UserAgg] = {
+    import ds.sparkSession.implicits._
+    ds.groupByKey(_.user_id)
+      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
+        (uid: Long, rows: Iterator[EventRow], state: GroupState[UserAgg]) =>
+          val prev = state.getOption.getOrElse(UserAgg(uid, 0L, 0.0))
+          var n = prev.n
+          var tot = prev.total
+          rows.foreach { r => n += 1; tot += r.value }
+          val next = UserAgg(uid, n, tot)
+          state.update(next)
+          Iterator(next)
+      }
+  }
+
+  /** Incremental corpus dedup, written once for batch AND streaming: drop
+    * incoming docs whose content hash already exists in the static corpus
+    * (stream-static LEFT ANTI join), then keep only the FIRST arrival of
+    * each new hash (stateful dropDuplicates). "First arrival wins" is
+    * well-defined only ACROSS micro-batches: two docs with the same new
+    * hash in one micro-batch keep a partition-order-dependent row.
+    */
+  def dedupAgainstCorpus(incoming: DataFrame, corpusHashes: DataFrame): DataFrame =
+    incoming.withColumn("h", md5(col("text")))
+      .join(corpusHashes, Seq("h"), "left_anti")
+      .dropDuplicates("h")
 }

@@ -8,8 +8,9 @@ Usage:
 Prints the common-query median ratio (the host-drift indicator: a
 uniform median shift is the machine, not the code), the regressions
 above BOTH thresholds (ratio AND absolute seconds — sub-second 2x
-swings are scheduler noise, not plans), the biggest improvements, and
-the queries present on only one side. Driver-side tooling like
+swings are scheduler noise, not plans), the biggest improvements, the
+new side's queries whose later timed runs still compile generated code,
+and the queries present on only one side. Driver-side tooling like
 selfcheck.py; never linked by library code.
 """
 import argparse, json, statistics, sys
@@ -62,6 +63,20 @@ def main():
     print("\nbiggest improvements on the old slow set (old >1s):")
     for r, k in sorted(imps)[:10]:
         print(f"  {k}: {a[k]:.2f} -> {b[k]:.2f}  ({r:.2f}x)")
+    # per-run codegen compile counts (queries that compiled at all): the
+    # first run compiles the query's classes, a later run should find them
+    # in the cache
+    compiles = bj.get("compiles")
+    if compiles is None:
+        print(f"\nno compile counts in {args[1]}")
+    else:
+        warm = sorted(((sum(cs[1:]), k, cs) for k, cs in compiles.items() if sum(cs[1:]) > 0),
+                      reverse=True)
+        print("\nqueries whose later runs still compile (cache thrash or a per-call literal):")
+        for n, k, cs in warm:
+            print(f"  {k}: {n} classes after run 1  per run={cs}")
+        if not warm:
+            print("  (none)")
     only_a, only_b = sorted(set(a) - set(b)), sorted(set(b) - set(a))
     if only_a:
         print(f"\nonly in {args[0]}: {', '.join(only_a)}")
