@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1081,12 +1081,12 @@ object GraphMiningOps {
     * broadcast-total jobs per round — the decade probe showed the wall
     * was round scheduling, not data (6.4 s → ~2 s at sf0.1).
     *
-    * The loop body plans inside [[LoopConf.withNarrowShuffle]] (4
-    * shuffle partitions, AQE off, restored on return; lazy
+    * The loop body plans inside [[graft.GraftSession.withConf]] (4
+    * shuffle partitions, AQE off, on a child session; lazy
     * localCheckpoint pins each round's plan at creation): per-round
     * frames are |nodes| rows, never |edges|, so 32 reduce tasks × 17
-    * rounds was pure scheduling overhead at local[32]. Not thread-safe
-    * across a shared SparkSession, for the reason that scope documents.
+    * rounds was pure scheduling overhead at local[32] (measured on q350:
+    * 5.8 s → 2.8 s at sf0.1).
     *
     * Checkpoint lifecycle (CALLER contract): per-iteration frames are
     * lazily checkpointed and all stay reachable from the returned plan —
@@ -1097,26 +1097,28 @@ object GraphMiningOps {
     */
   def hits(edges: DataFrame, iters: Int, topK: Int): DataFrame = {
     val spark = edges.sparkSession
-    // the edge-list distinct + initial mass run BEFORE the scope at the
-    // session's full shuffle width (they are |edges|-sized, the one
-    // genuinely data-sized step here)
+    // the edge list is checkpointed BEFORE the scope at the session's
+    // full shuffle width (it is |edges|-sized, the one genuinely
+    // data-sized step here)
     val e = edges.toDF("s", "p").localCheckpoint()
     // checkpointed frames the returned plan will NOT reference (the edge
     // list + superseded score rounds) — linked to the result on return so
     // a caller's release(result) frees them without the harness sweep
     val feeders = scala.collection.mutable.ListBuffer[DataFrame](e)
-    val parts = e.select(col("p")).distinct()
-    val np = parts.agg(count(lit(1)).as("k"))
     // AQE re-plans at every materialized exchange — with ~3 stages ×
     // 16 half-step jobs over grid-sized frames, that bookkeeping IS the
-    // bill (the partition counts are already pinned above; there is
-    // nothing for AQE to adapt). [[LoopConf.withNarrowShuffle]] scopes
-    // both confs and restores them on return.
-    LoopConf.withNarrowShuffle(spark) {
+    // bill (the partition counts are already pinned; there is nothing
+    // for AQE to adapt)
+    val width = 4
+    GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> width.toString,
+        "spark.sql.adaptive.enabled" -> "false") { child =>
+      val ce = GraftSession.bind(child, e)
+      val parts = ce.select(col("p")).distinct()
+      val np = parts.agg(count(lit(1)).as("k"))
       // narrow (shuffle-free) merge down to the round width: 16 half-step
       // scans at 32 tasks each was launch overhead, not parallelism — the
       // whole edge list fits a handful of in-memory partitions here
-      val eLoop = e.coalesce(LoopConf.Partitions * 2)
+      val eLoop = ce.coalesce(width * 2)
       var auth = parts.crossJoin(broadcast(np))
         .select(col("p"), expr("1000000L div k").as("a"))
         .localCheckpoint(false)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -224,12 +224,13 @@ object SpatialOps {
       .select(col("qk").as("id_a"), col("nk").as("id_b"))
     // Everything from here down is |suppliers|-bounded — a dimension, not
     // the data — so the WHOLE tail (CC + border pass + final assembly)
-    // runs under one narrow-shuffle scope (4 partitions, AQE off) and is
-    // materialized INSIDE it: executed at the caller's action instead,
-    // the session's AQE would schedule every exchange of this ~15-stage
-    // assembly as its own stage-job — measured as ~21 sequential 20-150ms
-    // jobs, the q255 scheduler floor. The grid join above is the
-    // data-sized step and was planned at session width with AQE on.
+    // runs under one narrow-shuffle scope (4 partitions, AQE off, on a
+    // child session) and is materialized INSIDE it: executed at the
+    // caller's action instead, the session's AQE would schedule every
+    // exchange of this ~15-stage assembly as its own stage-job — measured
+    // as ~21 sequential 20-150ms jobs, the q255 scheduler floor. The grid
+    // join above is the data-sized step and was planned at session width
+    // with AQE on.
     //
     // Spatial ε-neighbor graphs are long chains (diameter ≫ 5 —
     // measured: every sf0.1 run blew through the 5-round propagation
@@ -241,20 +242,25 @@ object SpatialOps {
     // §8.28). Vertices with no core neighbor aren't labeled by the star
     // (no edge) — the coalesce(cluster, ck) below restores them, which
     // is why the starEscape singleton re-attach isn't needed here.
-    val assembled = LoopConf.withNarrowShuffle(spark) {
-      val ccLabels = TextOps.connectedComponentsStarRdd(coreEdges, parts = LoopConf.Partitions)
+    val width = 4
+    val assembled = GraftSession.withConf(spark,
+        "spark.sql.shuffle.partitions" -> width.toString,
+        "spark.sql.adaptive.enabled" -> "false") { child =>
+      val Seq(cPts, cNbr, cCore, cEdges) =
+        Seq(pts, nbr, core, coreEdges).map(GraftSession.bind(child, _))
+      val ccLabels = TextOps.connectedComponentsStarRdd(cEdges, parts = width)
         .select(col("id").as("ck"), col("label").as("cluster"))
-      val coreLabels = core
+      val coreLabels = cCore
         .join(ccLabels, Seq("ck"), "left")
         .select(col("ck"), coalesce(col("cluster"), col("ck")).as("cluster"))
         .localCheckpoint(false)
-      val borderLabels = nbr
-        .join(core.select(col("ck")), nbr("nk") === col("ck"), "left_semi")
-        .join(core.select(col("ck").as("qck")), nbr("qk") === col("qck"), "left_anti")
+      val borderLabels = cNbr
+        .join(cCore.select(col("ck")), cNbr("nk") === col("ck"), "left_semi")
+        .join(cCore.select(col("ck").as("qck")), cNbr("qk") === col("qck"), "left_anti")
         .join(coreLabels.select(col("ck").as("nk"), col("cluster")), Seq("nk"))
         .groupBy(col("qk")).agg(min(col("cluster")).as("cluster"))
         .select(col("qk").as("pk2"), col("cluster"))
-      pts.select(col("pk"))
+      cPts.select(col("pk"))
         .join(coreLabels.select(col("ck").as("pk"), col("cluster").as("core_cluster")),
           Seq("pk"), "left")
         .join(borderLabels.withColumnRenamed("pk2", "pk"), Seq("pk"), "left")

@@ -1,8 +1,9 @@
 package graft.ops
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.DecimalType
 
 /** Typed event row for the stateful streaming operators. */
@@ -241,67 +242,68 @@ object StreamingOps {
         .write.mode("overwrite").parquet(path)
     }
 
-  /** Run a streaming query under a bounded state-partition count.
+  /** A bounded state-partition count for a streaming query.
     * `spark.sql.shuffle.partitions` pins the STATE STORE partition count
     * for the life of a streaming checkpoint — it should be sized to
     * per-partition state volume, not to the session's batch-CPU setting:
     * every micro-batch pays a per-store open/commit, so 32 stores × N
     * batches × 2 join sides on a small-state topology is pure overhead
-    * (measured ~40% of q157's wall time at local[32]). Batch plans inside
-    * the scope are unaffected in result, only in split count.
-    *
-    * NOT THREAD-SAFE across a shared SparkSession: the conf swap is
-    * session-global, so concurrent planning on the same session inside
-    * the scope picks up the narrow partition count (results unaffected).
-    * Fine for the serial driver; for concurrent use, plan on
-    * `spark.newSession()` (shared catalog, isolated conf).
+    * (measured ~40% of q157's wall time at local[32]).
     */
-  private[graft] def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
-  }
+  private[graft] def statePartitions(n: Int): (String, String) =
+    "spark.sql.shuffle.partitions" -> n.toString
 
-  /** Run a streaming query WITHOUT the trailing no-data micro-batch.
-    * That batch exists to let the advanced watermark evict state and emit
-    * eviction-driven results (outer-join nulls, timer fires) — queries
-    * whose output is match-driven (inner/semi joins: every row emits in
-    * the data batch where its match lands) pay it for nothing, and on a
-    * finite AvailableNow replay it is a whole extra state-store
-    * open/commit cycle. q211 (outer) and the timer topologies MUST NOT
-    * use this.
+  /** No trailing no-data micro-batch. That batch exists to let the
+    * advanced watermark evict state and emit eviction-driven results
+    * (outer-join nulls, timer fires) — queries whose output is
+    * match-driven (inner/semi joins: every row emits in the data batch
+    * where its match lands) pay it for nothing, and on a finite
+    * AvailableNow replay it is a whole extra state-store open/commit
+    * cycle. q211 (outer) and the timer topologies MUST NOT use this.
     */
-  private[graft] def withoutNoDataBatch[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try body finally spark.conf.set(key, prev)
-  }
+  private val noNoDataBatch = "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
+
+  /** The RocksDB state store (transformWithState requires it) — shared by
+    * q184, q231, q252 and StreamStateSpec. */
+  private[graft] val rocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Memory-sink names: one child session serves every drain with the
+    * same conf, so each drain needs a name of its own. */
+  private val drains = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Run the stream `build` makes on a child session with `conf` set (see
+    * [[GraftSession.withConf]]) to completion under AvailableNow, in
+    * output mode `mode` into a memory sink, and return the sink's rows as
+    * a frame of `spark`. */
+  private def drain(spark: SparkSession, mode: String, conf: (String, String)*)(
+      build: SparkSession => DataFrame): DataFrame =
+    GraftSession.withConf(spark, conf: _*) { child =>
+      val name = s"graft_drain_${drains.incrementAndGet()}"
+      build(child).writeStream.format("memory").queryName(name)
+        .outputMode(mode).trigger(Trigger.AvailableNow()).start().awaitTermination()
+      // the frame is analyzed as it is made and its plan holds the sink,
+      // so the rows outlive the view
+      val rows = child.table(name)
+      child.catalog.dropTempView(name)
+      rows
+    }
 
   def q122FileStream(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val src = eventsZone(spark, dir)
-    val schema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 2)
-      .parquet(src)
-    val agg = stream
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "15 minutes").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), moneySum(col("value")).as("sum_value"))
-      .select(
-        date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-        col("event_type"), col("n"), col("sum_value"))
-    val qname = "graft_q122_result"
     // 4 state partitions (round-11): complete-mode window agg commits one
     // store per partition per batch; the (window, type) grid is tiny
-    withStatePartitions(spark, 4) {
-      val query = agg.writeStream.format("memory").queryName(qname)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    }
-    spark.table(qname).orderBy(col("window_start"), col("event_type"))
+    drain(spark, "complete", statePartitions(4)) { s =>
+      s.readStream.schema(s.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(src)
+        .withWatermark("ts", "10 minutes")
+        .groupBy(window(col("ts"), "15 minutes").as("w"), col("event_type"))
+        .agg(count(lit(1)).as("n"), moneySum(col("value")).as("sum_value"))
+        .select(
+          date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
+          col("event_type"), col("n"), col("sum_value"))
+    }.orderBy(col("window_start"), col("event_type"))
   }
 
   val q122Sql: String =
@@ -351,24 +353,18 @@ object StreamingOps {
         col("c.event_id").as("click_id"), col("p.event_id").as("purchase_id"))
 
   def q157StreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val src = eventsZone(spark, dir) // shared with q122: same immutable zone
-    // one data micro-batch (trigger covers the whole zone) + the final
+    // one data micro-batch (trigger covers the whole zone), no trailing
     // no-data batch: inner matches are emission-order-independent and the
     // per-batch state-store open/commit cycle was ~40% of wall time at 2
-    // files/trigger (round-9 verdict task 3)
-    val joined = intervalJoined(spark, src, "inner", 16)
-    val qname = "graft_q157_result"
+    // files/trigger (round-9 verdict task 3).
     // 4 state partitions: a stream-stream join opens/commits 4 stores per
     // partition per side per batch — at this topology's state volume
     // (≤ tens of MB) fewer, fatter stores win; a cluster run sizes this
-    // to per-partition state, not cores (see withStatePartitions doc)
-    withStatePartitions(spark, 4) { withoutNoDataBatch(spark) {
-      val query = joined.writeStream.format("memory").queryName(qname)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    } }
-    spark.table(qname)
+    // to per-partition state, not cores (see statePartitions)
+    drain(spark, "append", statePartitions(4), noNoDataBatch) { s =>
+      intervalJoined(s, src, "inner", 16)
+    }
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_pairs"), countDistinct(col("click_id")).as("n_clicks"))
       .orderBy(col("user_id"))
@@ -397,22 +393,16 @@ object StreamingOps {
   // additionally drops its probe-side buffer row as soon as one match
   // confirms. Result aggregated per user for a bounded output.
   def q284StreamSemiJoin(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val src = eventsZone(spark, dir)
-    val semi = sideStream(spark, src, "click", 16).alias("c")
-      .join(sideStream(spark, src, "purchase", 16).alias("p"),
-        expr("""c.user_id = p.user_id AND
-                p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTES"""),
-        "left_semi")
-      .select(col("event_id").as("click_id"), col("user_id"))
-    val qname = "graft_q284_result"
-    withStatePartitions(spark, 4) { withoutNoDataBatch(spark) {
-      // see q157 on the 4-partition / no-no-data-batch choices
-      val query = semi.writeStream.format("memory").queryName(qname)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    } }
-    spark.table(qname)
+    // see q157 on the 4-partition / no-no-data-batch choices
+    drain(spark, "append", statePartitions(4), noNoDataBatch) { s =>
+      sideStream(s, src, "click", 16).alias("c")
+        .join(sideStream(s, src, "purchase", 16).alias("p"),
+          expr("""c.user_id = p.user_id AND
+                  p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTES"""),
+          "left_semi")
+        .select(col("event_id").as("click_id"), col("user_id"))
+    }
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_converting_clicks"))
       .orderBy(col("user_id"))
@@ -433,8 +423,8 @@ object StreamingOps {
     * API succeeding flatMapGroupsWithState): per-user running totals kept
     * in a typed ValueState by a [[UserTotalsProcessor]], executed over the
     * staged events landing zone in real micro-batches on the RocksDB state
-    * store (transformWithState requires it; the provider is restored after
-    * the run). Money rides the state as exact cent longs — every update is
+    * store (transformWithState requires it; set on the child session the
+    * query runs on). Money rides the state as exact cent longs — every update is
     * integer arithmetic, so the emitted totals are exact regardless of
     * micro-batch slicing. Update-mode emissions land in the memory sink
     * once per (user, batch); the final per-user state is selected with a
@@ -445,24 +435,8 @@ object StreamingOps {
     * shuffle — the canonical shape for a 100 TB/day per-entity running
     * aggregate; RocksDB spills it off-heap and checkpoints incrementally.
     */
-  /** Run `body` on the RocksDB state store (transformWithState requires
-    * it), restoring the previous provider after — shared by q184 and
-    * StreamStateSpec.
-    */
-  private[graft] def withRocksDb[T](spark: SparkSession)(body: => T): T = {
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prevProvider match {
-      case Some(p) => spark.conf.set(providerKey, p)
-      case None => spark.conf.unset(providerKey)
-    }
-  }
-
   /** The q184 per-user running-totals transformWithState topology
-    * (un-sunk; caller must be inside [[withRocksDb]]).
+    * (un-sunk; its session must run the [[rocksDb]] state store).
     */
   private[graft] def userTotalsUpdates(spark: SparkSession, src: String,
       filesPerTrigger: Int): DataFrame = {
@@ -488,28 +462,20 @@ object StreamingOps {
   }
 
   def q184TransformWithState(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val src = eventsZone(spark, dir)
-    withRocksDb(spark) {
-      val updates = userTotalsUpdates(spark, src, 2)
-      val qname = "graft_q184_result"
-      // 4 state partitions (round-11, q157's lesson): RocksDB opens and
-      // commits one store per partition per batch — at O(|users|) value
-      // state, fewer fatter stores win; results are slicing-independent
-      // (the final max_by state is the same under any batch count)
-      withStatePartitions(spark, 4) {
-        val query = updates.writeStream.format("memory").queryName(qname)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        query.awaitTermination()
-      }
-      spark.table(qname)
-        .groupBy(col("user_id"))
-        .agg(max(col("n")).as("n"),
-          max_by(col("cents"), col("n")).as("cents"))
-        .select(col("user_id"), col("n"),
-          (col("cents") / 100.0).as("total"))
-        .orderBy(col("user_id"))
+    // 4 state partitions (round-11, q157's lesson): RocksDB opens and
+    // commits one store per partition per batch — at O(|users|) value
+    // state, fewer fatter stores win; results are slicing-independent
+    // (the final max_by state is the same under any batch count)
+    drain(spark, "update", rocksDb, statePartitions(4)) { s =>
+      userTotalsUpdates(s, src, 2)
     }
+      .groupBy(col("user_id"))
+      .agg(max(col("n")).as("n"),
+        max_by(col("cents"), col("n")).as("cents"))
+      .select(col("user_id"), col("n"),
+        (col("cents") / 100.0).as("total"))
+      .orderBy(col("user_id"))
   }
 
   val q184Sql: String =
@@ -543,20 +509,14 @@ object StreamingOps {
   }
 
   def q188DedupWithinWatermark(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val src = eventsZone(spark, dir)
-    val deduped = dedupWithinWmStream(spark, src, 2)
-    val qname = "graft_q188_result"
     // 4 state partitions + no trailing no-data batch (round-11, q157's
     // lesson): dedup emission is ARRIVAL-driven — every surviving row
     // appends in the data batch it lands in; the no-data batch exists
     // only to evict expired dedup state, which changes no output row
-    withStatePartitions(spark, 4) { withoutNoDataBatch(spark) {
-      val query = deduped.writeStream.format("memory").queryName(qname)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    } }
-    spark.table(qname)
+    drain(spark, "append", statePartitions(4), noNoDataBatch) { s =>
+      dedupWithinWmStream(s, src, 2)
+    }
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), moneySum(col("value")).as("sum_value"))
       .orderBy(col("event_type"))
@@ -598,20 +558,14 @@ object StreamingOps {
   }
 
   def q226DedupThenWindow(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val src = eventsZone(spark, dir)
-    val agg = dedupThenWindowStream(spark, src, 2)
-    val qname = "graft_q226_result"
     // 4 state partitions (round-11): TWO stateful operators each commit
     // one store per partition per batch here; window emission is
     // watermark-driven, so the trailing no-data batch stays (it flushes
     // every window the final watermark passed)
-    withStatePartitions(spark, 4) {
-      val query = agg.writeStream.format("memory").queryName(qname)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    }
-    spark.table(qname).orderBy(col("window_start"), col("event_type"))
+    drain(spark, "append", statePartitions(4)) { s =>
+      dedupThenWindowStream(s, src, 2)
+    }.orderBy(col("window_start"), col("event_type"))
   }
 
   val q226Sql: String =
@@ -640,7 +594,6 @@ object StreamingOps {
     * entry idempotent under bench/verify re-runs.
     */
   def q230CheckpointRestart(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import java.nio.file.{Files, Path}
     val zoneAll = eventsZone(spark, dir)
     val work = Files.createTempDirectory("graft_q230").toString
@@ -692,8 +645,8 @@ object StreamingOps {
     * timers are watermark-evicted. The stream shuffles once on user_id.
     */
   /** The q231 timer-session topology (un-sunk): watermark → groupByKey →
-    * transformWithState with event-time timers. Caller must wrap in
-    * [[withRocksDb]]. Shared with StreamStateSpec so the eviction test
+    * transformWithState with event-time timers. Its session must run the
+    * [[rocksDb]] state store. Shared with StreamStateSpec so the eviction test
     * and the catalog run the same code.
     */
   private[graft] def timerSessionStream(spark: SparkSession, src: String,
@@ -721,7 +674,6 @@ object StreamingOps {
   }
 
   def q231TimerSessions(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val src = Staging.ensure("events_zone_ordered", dir) { path =>
       Tables.events(spark, dir)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
@@ -733,26 +685,19 @@ object StreamingOps {
       val base = System.currentTimeMillis() - (parts.length + 10) * 1000L
       parts.zipWithIndex.foreach { case (f, i) => f.setLastModified(base + i * 1000L) }
     }
-    withRocksDb(spark) {
-      // 2 files/trigger over the 4 time-ordered range files: two real
-      // watermark advances still exercise mid-stream timer fires, at half
-      // the RocksDB store-commit cycles; the emitted session set depends
-      // only on the FINAL watermark (range files don't overlap in ts, so
-      // no slicing-dependent late drops). Timers NEED the trailing
-      // no-data batch — kept.
-      val sessions = timerSessionStream(spark, src, 2)
-      val qname = "graft_q231_result"
-      withStatePartitions(spark, 4) {
-        val query = sessions.writeStream.format("memory").queryName(qname)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        query.awaitTermination()
-      }
-      spark.table(qname)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_sessions"), sum(col("n")).as("n_events"),
-          (sum(col("cents")) / 100.0).as("total_value"))
-        .orderBy(col("user_id"))
+    // 2 files/trigger over the 4 time-ordered range files: two real
+    // watermark advances still exercise mid-stream timer fires, at half
+    // the RocksDB store-commit cycles; the emitted session set depends
+    // only on the FINAL watermark (range files don't overlap in ts, so
+    // no slicing-dependent late drops). Timers NEED the trailing
+    // no-data batch — kept.
+    drain(spark, "append", rocksDb, statePartitions(4)) { s =>
+      timerSessionStream(s, src, 2)
     }
+      .groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n_sessions"), sum(col("n")).as("n_events"),
+        (sum(col("cents")) / 100.0).as("total_value"))
+      .orderBy(col("user_id"))
   }
 
   val q231Sql: String =
@@ -804,7 +749,6 @@ object StreamingOps {
     * by `clean`).
     */
   def q190ForeachBatchUpsert(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val src = eventsZone(spark, dir)
     val schema = spark.read.parquet(src).schema
     val base = Staging.pathFor("q190_target", dir)
@@ -823,10 +767,10 @@ object StreamingOps {
       .select(col("user_id"), col("s.ts").as("ts"),
         col("s.event_id").as("event_id"), col("s.value").as("value"))
     @volatile var version = -1
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 2).parquet(src)
-    withStatePartitions(spark, 8) {
-      val query = stream.writeStream
+    GraftSession.withConf(spark, statePartitions(8)) { child =>
+      child.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 2).parquet(src)
+        .writeStream
         .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
           val fresh = latestPerUser(batch.toDF())
           val merged =
@@ -837,10 +781,9 @@ object StreamingOps {
           version += 1
           ()
         }
-        .trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      child.read.parquet(s"$base/v$version")
     }
-    spark.read.parquet(s"$base/v$version")
       .select(col("user_id"), col("event_id").as("last_event_id"),
         col("value").as("last_value"))
       .orderBy(col("user_id"))
@@ -869,24 +812,18 @@ object StreamingOps {
   // watermark-bounded state) — the outer semantics add no state beyond
   // the left rows the inner join already buffers.
   def q211StreamOuterJoin(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val src = eventsZone(spark, dir)
     // single data batch like q157: the null-closure rule depends only on
     // the FINAL global watermark (slicing-independent), and the final
-    // no-data batch still runs the eviction pass that emits them
-    val joined = intervalJoined(spark, src, "leftOuter", 16)
-    val qname = "graft_q211_result"
+    // no-data batch still runs the eviction pass that emits them.
     // 2 state partitions (vs the inner/semi 4): the outer join is the one
     // variant that must run the trailing no-data batch, so it pays 2
     // batches x 4 stores x partitions of open/commit; at this state
     // volume narrower is faster (2.6 -> 2.35 s). Its floor is the second
     // batch itself - eviction-driven null emission is the semantics.
-    withStatePartitions(spark, 2) {
-      val query = joined.writeStream.format("memory").queryName(qname)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
+    drain(spark, "append", statePartitions(2)) { s =>
+      intervalJoined(s, src, "leftOuter", 16)
     }
-    spark.table(qname)
       .groupBy(col("user_id"))
       .agg(count(col("purchase_id")).as("n_matched"),
         count_if(col("purchase_id").isNull).as("n_unmatched_closed"))
@@ -937,22 +874,15 @@ object StreamingOps {
   // too big to broadcast would make this a per-batch shuffle join — that
   // regime is q123/q194's territory (salting / bloom-prune).
   def q215StreamStaticEnrich(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val src = eventsZone(spark, dir)
-    val schema = spark.read.parquet(src).schema
-    val dim = Tables.customer(spark, dir)
-      .select(col("c_custkey"), col("c_mktsegment"))
-    val enriched = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 2).parquet(src)
-      .select(col("user_id"), col("event_type"), col("value"))
-      .join(broadcast(dim), col("user_id") === col("c_custkey"))
-    val qname = "graft_q215_result"
-    withStatePartitions(spark, 8) {
-      val query = enriched.writeStream.format("memory").queryName(qname)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
+    drain(spark, "append", statePartitions(8)) { s =>
+      val dim = Tables.customer(s, dir)
+        .select(col("c_custkey"), col("c_mktsegment"))
+      s.readStream.schema(s.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", 2).parquet(src)
+        .select(col("user_id"), col("event_type"), col("value"))
+        .join(broadcast(dim), col("user_id") === col("c_custkey"))
     }
-    spark.table(qname)
       .groupBy(col("c_mktsegment"), col("event_type"))
       .agg(count(lit(1)).as("n"), moneySum(col("value")).as("sum_value"))
       .orderBy(col("c_mktsegment"), col("event_type"))
@@ -1001,25 +931,17 @@ object StreamingOps {
   }
 
   def q252MapStateTopk(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val src = eventsZone(spark, dir)
-    withRocksDb(spark) {
-      val updates = topValuesUpdates(spark, src, 2)
-      val qname = "graft_q252_result"
-      withStatePartitions(spark, 8) {
-        val query = updates.writeStream.format("memory").queryName(qname)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        query.awaitTermination()
-      }
-      spark.table(qname)
-        .groupBy(col("user_id"))
-        .agg(max(struct(col("v1"), col("v2"), col("v3"))).as("m"))
-        .select(col("user_id"),
-          nullif(col("m.v1"), lit(-1L)).as("top1"),
-          nullif(col("m.v2"), lit(-1L)).as("top2"),
-          nullif(col("m.v3"), lit(-1L)).as("top3"))
-        .orderBy(col("user_id"))
+    drain(spark, "update", rocksDb, statePartitions(8)) { s =>
+      topValuesUpdates(s, src, 2)
     }
+      .groupBy(col("user_id"))
+      .agg(max(struct(col("v1"), col("v2"), col("v3"))).as("m"))
+      .select(col("user_id"),
+        nullif(col("m.v1"), lit(-1L)).as("top1"),
+        nullif(col("m.v2"), lit(-1L)).as("top2"),
+        nullif(col("m.v3"), lit(-1L)).as("top3"))
+      .orderBy(col("user_id"))
   }
 
   val q252Sql: String =

@@ -23,9 +23,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     lazy plan executed as a SINGLE final action with RDD-level stage
   *     reuse (kcorePeel 8.3→2.6 s, lpaCommunities 9.0→4.8 s at sf0.1).
   *     Eager would cost 2·rounds+1 blocking jobs for the same answer.
-  *   - `narrow-scope`: inside `LoopConf.withNarrowShuffle` — AQE is OFF
-  *     for the scope, so there is no final pass to miss, and the frames
-  *     are dimension-bounded by the scope's contract.
+  *   - `narrow-scope`: inside a `GraftSession.withConf` scope that turns
+  *     AQE OFF, so there is no final pass to miss, and the frames are
+  *     dimension-bounded by the caller's contract.
   *   - `first-action-materializer`: the convergence aggregate is the
   *     frame's FIRST action, so one job both materializes the round and
   *     answers the check (vs eager-checkpoint-then-collect = 2 jobs per
@@ -72,7 +72,7 @@ class CheckpointDisciplineSpec extends AnyFunSuite {
     ("ops/GraphMiningOps.scala", "lpaCommunities") ->
       ("fused-loop", "half-round label frames feed one unioned trajectory action; measured 9.0→4.8 s"),
     ("ops/GraphMiningOps.scala", "hits") ->
-      ("narrow-scope", "grid-sized score rounds inside withNarrowShuffle at :1032"),
+      ("narrow-scope", "grid-sized score rounds inside withConf (4 partitions, AQE off)"),
     ("ops/InferenceTestOps.scala", "hlShift") ->
       ("fanout-fusion", "grid-bounded hist feeds a/b/na/nb; diff feeds the rank probe AND tot"),
     ("ops/InferenceTestOps.scala", "rouge2Pairs") ->
@@ -86,7 +86,7 @@ class CheckpointDisciplineSpec extends AnyFunSuite {
     ("ops/SpatialOps.scala", "epsCosPairs") ->
       ("fanout-fusion", "grid cells feed probe explode AND build side AND vector fetch"),
     ("ops/SpatialOps.scala", "q255Dbscan") ->
-      ("narrow-scope", "core/cluster assembly inside withNarrowShuffle at :244; pre-scope frames are supplier-bounded"),
+      ("narrow-scope", "core/cluster assembly inside withConf (4 partitions, AQE off); pre-scope frames are supplier-bounded"),
     ("ops/TextOps.scala", "connectedComponentsStar") ->
       ("first-action-materializer", "fingerprint aggregate is the round's first action; contraction-bounded edge set; A/B'd r13"),
     ("ops/TextOps.scala", "incrementalDedup") ->
@@ -173,12 +173,13 @@ class CheckpointDisciplineSpec extends AnyFunSuite {
     assert(emptyNote.isEmpty, s"entries without a rationale note: ${emptyNote.keySet}")
   }
 
-  test("narrow-scope entries really have a withNarrowShuffle scope in their file") {
+  test("narrow-scope entries really have an AQE-off withConf scope") {
     val narrowFiles = allowlist.collect { case ((f, _), ("narrow-scope", _)) => f }.toSet
     narrowFiles.foreach { rel =>
       val text = readText(s"src/main/scala/graft/$rel")
-      assert(text.contains("withNarrowShuffle"),
-        s"$rel is allowlisted as narrow-scope but contains no withNarrowShuffle scope")
+      assert(text.contains("GraftSession.withConf(") &&
+          text.contains("\"spark.sql.adaptive.enabled\" -> \"false\""),
+        s"$rel is allowlisted as narrow-scope but has no withConf scope that turns AQE off")
     }
   }
 }

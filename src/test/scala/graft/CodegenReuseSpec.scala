@@ -26,19 +26,6 @@ class CodegenReuseSpec extends SparkSpec {
     Checkpoints.releaseAll(spark)
   }
 
-  /** Orphaned tasks of earlier suites compile code of their own, so wait
-    * until no job has been active for 20 polls in a row (within 60 s). */
-  private def awaitIdle(): Unit = {
-    val tracker = spark.sparkContext.statusTracker
-    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-    var idle = 0
-    while (idle < 20 && System.nanoTime() < deadline) {
-      idle = if (tracker.getActiveJobIds.isEmpty) idle + 1 else 0
-      Thread.sleep(50)
-    }
-    assert(idle === 20, s"jobs still active: ${tracker.getActiveJobIds.mkString(",")}")
-  }
-
   test("a warm curation pass compiles no generated class") {
     val out = Files.createTempDirectory("graft_codegen_reuse")
     try {

@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.ops.StreamingOps
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Pins the WATERMARK-EVICTION contract of the streaming state operators
   * (SURVEY §8.10): over a time-ordered multi-batch replay, peak state
@@ -54,24 +55,27 @@ class StreamStateSpec extends SparkSpec {
     genEventsZone(spark, dir, 6000L, 30, 12)
   }
 
-  private def runAndMeasure(stream: org.apache.spark.sql.DataFrame, mode: String,
-      qname: String): (org.apache.spark.sql.streaming.StreamingQuery, Long, Long) = {
-    val query = ops.StreamingOps.withStatePartitions(spark, 4) {
-      val q = stream.writeStream.format("memory").queryName(qname)
+  /** Drain the stream `build` makes into a memory sink on a child session
+    * with 4 state partitions plus `conf`: the query, its peak state rows
+    * and the sink's rows. */
+  private def runAndMeasure(mode: String, qname: String, conf: (String, String)*)(
+      build: SparkSession => DataFrame): (StreamingQuery, Long, DataFrame) = {
+    var query: StreamingQuery = null
+    val rows = GraftSession.withConf(spark, StreamingOps.statePartitions(4) +: conf: _*) { child =>
+      query = build(child).writeStream.format("memory").queryName(qname)
         .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(); q
+      query.awaitTermination()
+      child.table(qname)
     }
-    val progs = query.recentProgress
-    val peak = progs.map(p => p.stateOperators.map(_.numRowsTotal).sum)
+    val peak = query.recentProgress.map(p => p.stateOperators.map(_.numRowsTotal).sum)
       .foldLeft(0L)(math.max)
-    val rowsIn = progs.map(_.numInputRows).sum
-    (query, peak, rowsIn)
+    (query, peak, rows)
   }
 
   test("interval-join state is watermark-evicted over an ordered replay, result equals batch twin") {
-    val (_, peak, _) = runAndMeasure(
-      ops.StreamingOps.intervalJoined(spark, zone, "inner", 2),
-      "append", "graft_sss_join")
+    val (_, peak, joined) = runAndMeasure("append", "graft_sss_join") {
+      StreamingOps.intervalJoined(_, zone, "inner", 2)
+    }
     val sideRows = spark.read.parquet(zone)
       .filter(col("event_type").isin("click", "purchase")).count()
     assert(peak > 0, "join must have buffered some state")
@@ -79,7 +83,7 @@ class StreamStateSpec extends SparkSpec {
       s"peak join state $peak should be a batch-window slice of the $sideRows side rows, not the whole stream")
 
     // the streamed match set must equal the batch interval join exactly
-    val streamed = spark.table("graft_sss_join").count()
+    val streamed = joined.count()
     val ev = spark.read.parquet(zone)
     val c = ev.filter(col("event_type") === "click").select(
       col("user_id"), col("event_id").as("cid"), col("ts").as("cts"))
@@ -92,11 +96,8 @@ class StreamStateSpec extends SparkSpec {
   }
 
   test("transformWithState holds exactly one state row per user") {
-    val (query, peak, _) = ops.StreamingOps.withRocksDb(spark) {
-      val (q, pk, ri) = runAndMeasure(
-        ops.StreamingOps.userTotalsUpdates(spark, zone, 2),
-        "update", "graft_sss_tws")
-      (q, pk, ri)
+    val (query, peak, _) = runAndMeasure("update", "graft_sss_tws", StreamingOps.rocksDb) {
+      StreamingOps.userTotalsUpdates(_, zone, 2)
     }
     val users = spark.read.parquet(zone).select("user_id").distinct().count()
     val finalState = query.recentProgress.last.stateOperators.map(_.numRowsTotal).sum
@@ -138,23 +139,21 @@ class StreamStateSpec extends SparkSpec {
     }
 
   test("q252 MapState top-k survives a mid-stream restart from checkpoint") {
-    import org.apache.spark.sql.streaming.Trigger
     val work = java.nio.file.Files.createTempDirectory("graft_q252_rst").toString
     val (h1, h2, staged) = splitZone(work)
     // foreachBatch → parquet: the sink that both accumulates across runs
     // and supports checkpoint recovery (memory sink recovers nothing)
-    def drain(src: String, cp: String, out: String): Unit =
-      ops.StreamingOps.withRocksDb(spark) {
-        ops.StreamingOps.withStatePartitions(spark, 4) {
-          val q = ops.StreamingOps.topValuesUpdates(spark, src, 2)
-            .writeStream.foreachBatch {
-              (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-                batch.write.mode("append").parquet(out); ()
-            }
-            .option("checkpointLocation", cp)
-            .outputMode("update").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+    def drain(src: String, cp: String, out: String): DataFrame =
+      GraftSession.withConf(spark, StreamingOps.rocksDb, StreamingOps.statePartitions(4)) { child =>
+        StreamingOps.topValuesUpdates(child, src, 2)
+          .writeStream.foreachBatch {
+            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+              batch.write.mode("append").parquet(out); ()
+          }
+          .option("checkpointLocation", cp)
+          .outputMode("update").trigger(Trigger.AvailableNow()).start()
+          .awaitTermination()
+        child.read.parquet(out)
       }
     land(h1, staged)
     drain(staged, s"$work/cp", s"$work/out")     // run 1: first half
@@ -175,18 +174,16 @@ class StreamStateSpec extends SparkSpec {
   }
 
   test("q231 timer sessions survive a mid-stream restart from checkpoint") {
-    import org.apache.spark.sql.streaming.Trigger
     val work = java.nio.file.Files.createTempDirectory("graft_q231_rst").toString
     val (h1, h2, staged) = splitZone(work)
-    def drain(src: String, cp: String, out: String): Unit =
-      ops.StreamingOps.withRocksDb(spark) {
-        ops.StreamingOps.withStatePartitions(spark, 4) {
-          val q = ops.StreamingOps.timerSessionStream(spark, src, 2)
-            .writeStream.format("parquet")
-            .option("path", out).option("checkpointLocation", cp)
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
+    def drain(src: String, cp: String, out: String): DataFrame =
+      GraftSession.withConf(spark, StreamingOps.rocksDb, StreamingOps.statePartitions(4)) { child =>
+        StreamingOps.timerSessionStream(child, src, 2)
+          .writeStream.format("parquet")
+          .option("path", out).option("checkpointLocation", cp)
+          .outputMode("append").trigger(Trigger.AvailableNow()).start()
+          .awaitTermination()
+        child.read.parquet(out)
       }
     land(h1, staged)
     drain(staged, s"$work/cp", s"$work/out")
@@ -204,15 +201,14 @@ class StreamStateSpec extends SparkSpec {
   }
 
   test("dropDuplicatesWithinWatermark evicts seen-key state behind the watermark") {
-    val (_, peak, _) = runAndMeasure(
-      ops.StreamingOps.dedupWithinWmStream(spark, zone, 2)
-        .select("event_id", "event_type", "value"),
-      "append", "graft_sss_dedup")
+    val (_, peak, deduped) = runAndMeasure("append", "graft_sss_dedup") {
+      s => StreamingOps.dedupWithinWmStream(s, zone, 2).select("event_id", "event_type", "value")
+    }
     val n = spark.read.parquet(zone).count()
     assert(peak > 0)
     assert(peak < n / 2,
       s"dedup state $peak should be a watermark-window set, not all $n keys (plain dropDuplicates would hold $n)")
     // every event arrives twice (double feed); exactly one copy survives
-    assert(spark.table("graft_sss_dedup").count() === n)
+    assert(deduped.count() === n)
   }
 }
