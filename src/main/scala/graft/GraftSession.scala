@@ -14,7 +14,8 @@ import org.apache.spark.sql.classic.GraftPlanBridge
   * - UTC session timezone (oracle/date determinism).
   * - nanosAsLong so TIMESTAMP(NANOS) parquet (e.g. the events table) reads
   *   instead of throwing.
-  * - graft extensions (cosine_sim et al.) injected session-wide.
+  * - graft extensions (cosine_sim et al.) injected session-wide, for
+  *   SQL text that users write (library code uses typed Columns).
   * - a generated-code cache of 1000 classes
   *   (`spark.sql.codegen.cache.maxEntries`, a static conf that Spark reads
   *   once per JVM, when it first generates code). The cache maps generated
@@ -65,7 +66,9 @@ object GraftSession {
     * it is given; a caller frame it reads must first go through
     * [[bind]]`(child, df)`. Conf is read at plan time, so only what the
     * body plans (or checkpoints) sees the scope; what the caller later
-    * plans over the result uses the caller's conf. */
+    * plans over the result uses the caller's conf. Temp views the body
+    * creates stay on the child, which every call with the same caller and
+    * conf reuses, so concurrent bodies that create one view name share it. */
   def withConf(spark: SparkSession, conf: (String, String)*)(
       body: SparkSession => DataFrame): DataFrame =
     bind(spark, body(child(spark, conf)))

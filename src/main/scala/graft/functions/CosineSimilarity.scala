@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -68,14 +67,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object CosineSimilarity {
-  /** Register `cosine_sim(a, b)` in the session's function registry so it's
-    * usable from expr()/SQL (avoids constructing Column from Expression
-    * directly, which Spark 4's Column API hides).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -64,9 +63,4 @@ object GeohashQ {
     }
     UTF8String.fromBytes(out)
   }
-
-  /** Per-session registration (driver-created sessions lack extensions). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "geohash_q", exprs => GeohashExpr(exprs.head, exprs(1)), "scala_udf")
 }

@@ -4,15 +4,14 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session-extension registration for graft's custom expressions — the
-  * deployment path for clusters where sessions are built once with
+/** Session extension that gives users' SQL text graft's expression names
+  * (`cosine_sim`, `unaccent`, `jaro_winkler`, `geohash_q`) and the
+  * `LevenshteinRewrite` optimizer rule. `GraftSession` builds every
+  * session with it; elsewhere set
   * `spark.sql.extensions=graft.functions.GraftExtensions` (or
-  * `.withExtensions(new GraftExtensions)`), making `cosine_sim` available
-  * in every SQL/expr context without per-query registration.
-  *
-  * (`CosineSimilarity.register` remains the per-session runtime
-  * alternative used by the driver-contract queries, whose SparkSession is
-  * created by the driver without extensions.)
+  * `.withExtensions(new GraftExtensions)`). Library code does not use
+  * these names: it builds the same expressions as typed Columns through
+  * [[GraftFunctions]], so it also works on a session without them.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(extensions: SparkSessionExtensions): Unit = {

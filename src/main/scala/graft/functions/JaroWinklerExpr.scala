@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -106,9 +105,4 @@ object JaroWinkler {
       jaro + (l * 0.1) * (1.0 - jaro)
     } else jaro
   }
-
-  /** Per-session registration (driver-created sessions lack extensions). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler", exprs => JaroWinklerExpr(exprs.head, exprs(1)), "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -83,16 +82,4 @@ case class LshBands(child: Expression, planes: Array[Double],
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object LshBands {
-  /** Register `name(v)` with a fixed plane matrix (row-major, one row per
-    * hyperplane) so it's usable from expr()/SQL. */
-  def register(spark: SparkSession, name: String,
-               planes: Seq[Seq[Double]], planesPerBand: Int): Unit = {
-    val dims = planes.head.length
-    val flat = planes.flatten.toArray
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => LshBands(exprs(0), flat, planesPerBand, dims), "scala_udf")
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -55,9 +54,4 @@ object UnicodeNorm {
     UTF8String.fromString(
       java.text.Normalizer.normalize(sb.toString, java.text.Normalizer.Form.NFC))
   }
-
-  /** Per-session registration (driver-created sessions lack extensions). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "unaccent", exprs => StripAccentsExpr(exprs.head), "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -63,14 +62,4 @@ case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object WordShingles {
-  /** Register `word_shingles(toks, k)` (k a literal int) for expr()/SQL. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles",
-      exprs => WordShingles(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]),
-      "scala_udf")
 }

@@ -1825,10 +1825,9 @@ object CapacityAuditOps {
   // 2-band signature, and a bounded groupBy on (band, sig) — linear end
   // to end; nothing all-pairs anywhere.
   def q428LshBucketForecast(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.WordShingles.register(spark)
     val idx = spark.range(1).select(explode(expr("array(0, 1, 2, 3)")).as("i"))
     val mins = Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(expr(TextOps.shingles3Sql)).as("s"))
+      .select(col("doc_id"), explode(TextOps.shingles(3)).as("s"))
       .crossJoin(broadcast(idx))
       .select(col("doc_id"), col("i"),
         md5(concat(col("s"), lit("#"), col("i").cast("string"))).as("h"))
@@ -1951,11 +1950,10 @@ object CapacityAuditOps {
   // aggregate, a 16-column per-doc pivot, two slim joins onto the capped
   // pair set (bounded by the pair pipeline's guard), a 3-group rollup.
   def q436MinhashWidthAudit(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.WordShingles.register(spark)
     val idx = spark.range(1).select(
       explode(expr("array" + (0 until 16).mkString("(", ", ", ")"))).as("i"))
     val mins = Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(expr(TextOps.shingles3Sql)).as("s"))
+      .select(col("doc_id"), explode(TextOps.shingles(3)).as("s"))
       .crossJoin(broadcast(idx))
       // 60-bit digest prefix as BIGINT before the MIN (the q32 fix,
       // promoted here by the PlanLint SortAggregate rule): a STRING min

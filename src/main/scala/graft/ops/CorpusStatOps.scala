@@ -1818,9 +1818,8 @@ object CorpusStatOps {
   // catalog dimension, not a data dimension), so the join is linear in
   // types at any corpus scale. Jaccard on exact integer counts.
   def q427SourceTypeOverlap(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.WordShingles.register(spark)
     val types = Tables.documents(spark, dir)
-      .select(col("source"), explode(expr(TextOps.shingles3Sql)).as("s"))
+      .select(col("source"), explode(TextOps.shingles(3)).as("s"))
       .distinct()
       .localCheckpoint(false) // feeds the per-source sizes AND the pair join
     val sizes = types.groupBy(col("source")).agg(count(lit(1)).as("n_types"))

@@ -424,9 +424,8 @@ object CurateOps {
       .withColumn("sw", size(expr("filter(toks, x -> x = 'the' or x = 'a')")))
     // eval grams from the held-out slice of the FULL corpus (q106 contract);
     // the native WordShingles expression guards docs shorter than the gram
-    graft.functions.WordShingles.register(spark)
     val grams = all.select(col("doc_id"),
-      explode(expr("word_shingles(filter(split(lower(text), ' '), t -> t != ''), 4)")).as("g"))
+      explode(TextOps.shingles(4)).as("g"))
     val evalGrams = grams.filter(col("doc_id") % 50 === 0)
       .select(col("g")).distinct().withColumn("hit", lit(1))
     val hits = grams.filter(col("doc_id") % 50 =!= 0)

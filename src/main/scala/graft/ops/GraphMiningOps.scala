@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.GraftFunctions.cosineSim
 import graft.{GraftSession, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -150,7 +151,7 @@ object GraphMiningOps {
       .orderBy(col("sim").desc, col("vec_id").asc)
     val top = base.crossJoin(broadcast(probes))
       .filter(col("vec_id") =!= col("qid"))
-      .withColumn("sim", expr("cosine_sim(v, qv)"))
+      .withColumn("sim", cosineSim(col("v"), col("qv")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
     val votes = top.groupBy(col("qid"), col("qlabel"), col("label").as("nlabel"))

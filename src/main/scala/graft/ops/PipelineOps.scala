@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.Tables
+import graft.functions.GraftFunctions.cosineSim
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -31,14 +32,13 @@ object PipelineOps {
   // broadcast left-join + per-doc aggregate, i.e. one shuffle on doc_id.
   // No inverted-index self-join is needed because the right side is tiny.
   def q106Decontaminate(spark: SparkSession, dir: String): DataFrame =
-    decontaminate(Tables.documents(spark, dir), spark)
+    decontaminate(Tables.documents(spark, dir))
 
   /** documents(doc_id, text) → per-train-doc contamination counts; factored
     * for spec-driven planted-overlap fixtures. */
-  def decontaminate(docs: DataFrame, spark: SparkSession): DataFrame = {
-    graft.functions.WordShingles.register(spark)
+  def decontaminate(docs: DataFrame): DataFrame = {
     val grams = docs.select(col("doc_id"),
-      explode(expr("word_shingles(filter(split(lower(text), ' '), t -> t != ''), 4)")).as("g"))
+      explode(TextOps.shingles(4)).as("g"))
     val evalGrams = grams.filter(col("doc_id") % 50 === 0)
       .select(col("g")).distinct().withColumn("hit", lit(1))
     grams.filter(col("doc_id") % 50 =!= 0)
@@ -213,12 +213,11 @@ object PipelineOps {
   // re-executes — every earlier iteration's full assignment+update
   // lineage, growing the plan exponentially in `iters`.
   def q110KMeans(spark: SparkSession, dir: String): DataFrame =
-    kmeans(Tables.embeddings(spark, dir), spark, k = 8, iters = 3)
+    kmeans(Tables.embeddings(spark, dir), k = 8, iters = 3)
 
   /** embeddings(vec_id, embedding) → (vec_id, cluster, sim) after `iters`
     * Lloyd updates + a final assignment; factored for spec fixtures. */
-  def kmeans(embeddings: DataFrame, spark: SparkSession, k: Int, iters: Int): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
+  def kmeans(embeddings: DataFrame, k: Int, iters: Int): DataFrame = {
     // eager checkpoint: base is loop-invariant and consumed by iters + 2
     // SEPARATE actions (init, each iteration's eager centroid update, the
     // final assignment) — unmaterialized, every action re-runs the scan +
@@ -230,7 +229,7 @@ object PipelineOps {
       .select(col("vec_id").cast("int").as("cluster"), col("v").as("cv"))
     for (_ <- 1 to iters) {
       val assigned = base.crossJoin(broadcast(cents))
-        .withColumn("csim", expr("cosine_sim(v, cv)"))
+        .withColumn("csim", cosineSim(col("v"), col("cv")))
         .groupBy(col("vec_id"))
         .agg(max(struct(col("csim"), col("cluster"))).as("best"),
           first(col("v")).as("v"))
@@ -248,7 +247,7 @@ object PipelineOps {
         .localCheckpoint()
     }
     base.crossJoin(broadcast(cents))
-      .withColumn("csim", expr("cosine_sim(v, cv)"))
+      .withColumn("csim", cosineSim(col("v"), col("cv")))
       .groupBy(col("vec_id"))
       .agg(max(struct(col("csim"), col("cluster"))).as("best"))
       .select(col("vec_id"), col("best.cluster").as("cluster"),
@@ -625,16 +624,19 @@ object PipelineOps {
   // iteration is the previous frontier joined one step up), while q114's
   // doubling runs O(log depth) rounds — for deep chains at 100 TB the
   // doubling operator is the scale path, the CTE is the ergonomic one.
-  def q146RecursiveCte(spark: SparkSession, dir: String): DataFrame = {
-    Tables.customer(spark, dir).createOrReplaceTempView("customer")
-    spark.sql(
-      """WITH RECURSIVE r(node, cur, depth) AS (
-        |  SELECT c_custkey, c_custkey, CAST(0 AS BIGINT) FROM customer
-        |  UNION ALL
-        |  SELECT node, cur div 7, depth + 1 FROM r WHERE cur >= 7)
-        |SELECT node AS custkey, cur AS root, depth
-        |FROM r WHERE cur < 7 ORDER BY custkey""".stripMargin)
-  }
+  // The `customer` view lives on the `withConf` child, not in the caller's
+  // catalog (two concurrent calls with different `dir`s share its name).
+  def q146RecursiveCte(spark: SparkSession, dir: String): DataFrame =
+    GraftSession.withConf(spark) { c =>
+      Tables.customer(c, dir).createOrReplaceTempView("customer")
+      c.sql(
+        """WITH RECURSIVE r(node, cur, depth) AS (
+          |  SELECT c_custkey, c_custkey, CAST(0 AS BIGINT) FROM customer
+          |  UNION ALL
+          |  SELECT node, cur div 7, depth + 1 FROM r WHERE cur >= 7)
+          |SELECT node AS custkey, cur AS root, depth
+          |FROM r WHERE cur < 7 ORDER BY custkey""".stripMargin)
+    }
 
   // --------------------------------------------------------------------------
   // q115 — temperature-scaled mixture sampling: per-language sampling

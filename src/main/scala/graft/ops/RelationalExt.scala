@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.Tables
+import graft.functions.GraftFunctions.cosineSim
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,18 +21,23 @@ object RelationalExt {
 
   // --------------------------------------------------------------------------
   // q23 — GROUPING SETS through the spark.sql entry point (SQL API parity:
-  // the same engine surface a SQL-first user of the library hits).
-  def q23GroupingSets(spark: SparkSession, dir: String): DataFrame = {
-    Tables.orders(spark, dir).createOrReplaceTempView("orders")
-    spark.sql(
-      """SELECT COALESCE(o_orderstatus, 'ALL') AS status,
-        |  COALESCE(o_orderpriority, 'ALL') AS priority,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        |ORDER BY status, priority""".stripMargin)
-  }
+  // the same engine surface a SQL-first user of the library hits). The
+  // SQL operators here (q23, q25, q147) register their temp views on the
+  // `withConf` child, never in the caller's catalog; two concurrent calls
+  // with different `dir`s on one session still share the child's view
+  // names, so one may read the other's tables.
+  def q23GroupingSets(spark: SparkSession, dir: String): DataFrame =
+    GraftSession.withConf(spark) { c =>
+      Tables.orders(c, dir).createOrReplaceTempView("orders")
+      c.sql(
+        """SELECT COALESCE(o_orderstatus, 'ALL') AS status,
+          |  COALESCE(o_orderpriority, 'ALL') AS priority,
+          |  COUNT(*) AS n,
+          |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+          |FROM orders
+          |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
+          |ORDER BY status, priority""".stripMargin)
+    }
 
   val q23Sql: String =
     """SELECT COALESCE(o_orderstatus, 'ALL') AS status,
@@ -71,11 +77,12 @@ object RelationalExt {
   // --------------------------------------------------------------------------
   // q25 — correlated EXISTS + scalar subquery via spark.sql. The scalar
   // average goes through decimal so both engines see the identical double.
-  def q25Subqueries(spark: SparkSession, dir: String): DataFrame = {
-    Tables.customer(spark, dir).createOrReplaceTempView("customer")
-    Tables.orders(spark, dir).createOrReplaceTempView("orders")
-    spark.sql(q25Sql)
-  }
+  def q25Subqueries(spark: SparkSession, dir: String): DataFrame =
+    GraftSession.withConf(spark) { c =>
+      Tables.customer(c, dir).createOrReplaceTempView("customer")
+      Tables.orders(c, dir).createOrReplaceTempView("orders")
+      c.sql(q25Sql)
+    }
 
   val q25Sql: String =
     """SELECT c_custkey, c_acctbal FROM customer c
@@ -176,7 +183,6 @@ object RelationalExt {
   // (same semantics as q40's lambda-fold version, same oracle; the fused
   // single-pass loop replaces three interpreted folds per pair).
   def q44CosineTopkNative(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val base = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("v"))
     val queries = base.filter(col("vec_id") < 5)
@@ -184,7 +190,7 @@ object RelationalExt {
     val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id").asc)
     base.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("qid"))
-      .withColumn("sim", expr("cosine_sim(v, qv)"))
+      .withColumn("sim", cosineSim(col("v"), col("qv")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 10)
       .select(col("qid"), col("rank"), col("vec_id"), Num.pround(col("sim"), 4).as("sim"))
@@ -532,17 +538,18 @@ object RelationalExt {
   // join + per-key limit, not N correlated executions (the probe plan
   // shows BroadcastHashJoin — no re-scan per customer row).
   // Deterministic: the inner ordering totalizes ties with o_orderkey.
-  def q147LateralTopk(spark: SparkSession, dir: String): DataFrame = {
-    Tables.customer(spark, dir).createOrReplaceTempView("customer")
-    Tables.orders(spark, dir).createOrReplaceTempView("orders")
-    spark.sql(
-      """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
-        |FROM customer c, LATERAL (
-        |  SELECT o_orderkey, o_totalprice FROM orders
-        |  WHERE o_custkey = c.c_custkey
-        |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) o
-        |ORDER BY c.c_custkey, o.o_orderkey""".stripMargin)
-  }
+  def q147LateralTopk(spark: SparkSession, dir: String): DataFrame =
+    GraftSession.withConf(spark) { c =>
+      Tables.customer(c, dir).createOrReplaceTempView("customer")
+      Tables.orders(c, dir).createOrReplaceTempView("orders")
+      c.sql(
+        """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
+          |FROM customer c, LATERAL (
+          |  SELECT o_orderkey, o_totalprice FROM orders
+          |  WHERE o_custkey = c.c_custkey
+          |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) o
+          |ORDER BY c.c_custkey, o.o_orderkey""".stripMargin)
+    }
 
   val q147Sql: String =
     """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice

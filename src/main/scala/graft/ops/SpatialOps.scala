@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.GraftFunctions.geohashQ
 import graft.{GraftSession, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -117,7 +118,6 @@ object SpatialOps {
   //
   // Scale: row-local, one static call per row inside whole-stage codegen.
   def q247Geohash(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeohashQ.register(spark)
     Tables.customer(spark, dir)
       .select(col("c_custkey"),
         expr("cast(conv(substring(md5(concat('glat:', c_custkey)), 1, 8), 16, 10) as bigint) % 1048576")
@@ -125,7 +125,7 @@ object SpatialOps {
         expr("cast(conv(substring(md5(concat('glon:', c_custkey)), 1, 8), 16, 10) as bigint) % 1048576")
           .as("lonq"))
       .select(col("c_custkey"),
-        expr("geohash_q(latq, lonq)").as("geohash"),
+        geohashQ(col("latq"), col("lonq")).as("geohash"),
         Num.pround((col("latq") * 180).cast("double") / 1048576 - 90, 6).as("lat"),
         Num.pround((col("lonq") * 360).cast("double") / 1048576 - 180, 6).as("lon"))
       .orderBy(col("c_custkey"))

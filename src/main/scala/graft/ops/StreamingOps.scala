@@ -64,7 +64,6 @@ case class VecRow(vec_id: Long, embedding: Seq[Double])
   */
 final class VecIndexStreamIngestor(spark: SparkSession, root: String,
     vecStore: DataFrame, threshold: Double = 0.9) {
-  graft.functions.CosineSimilarity.register(spark)
   @volatile private var st = BandIndex.readState(spark, root)
   private val store = vecStore.select("vec_id", "embedding")
   private val buf = scala.collection.mutable.ArrayBuffer[BandIndex.IngestResult]()
@@ -78,7 +77,7 @@ final class VecIndexStreamIngestor(spark: SparkSession, root: String,
     if (n > 0) {
       val all = store.unionByName(b)
       val r = BandIndex.ingestSigs(b.sparkSession, root,
-        VectorOps.vecSignatures(b.sparkSession, b),
+        VectorOps.vecSignatures(b),
         VectorOps.cosineVerify(all, threshold), incoming = n, prev = Some(st))
       st = r.state
       buf.synchronized { buf += r; () }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.GraftFunctions.{jaroWinkler, unaccent, wordShingles}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -38,24 +39,21 @@ object TextOps {
   val toks: Column = expr("filter(split(lower(text), ' '), t -> t != '')")
   val toksSqlD = "list_filter(string_split(lower(text), ' '), t -> t != '')"
 
-  /** Distinct word-3-gram shingles, computed ROW-LOCALLY by the native
-    * [[graft.functions.WordShingles]] expression — no token explode, no
-    * window sort, no distinct shuffle. (History: the transform/
+  /** Distinct word-`k`-gram shingles of [[toks]], computed ROW-LOCALLY by
+    * the native [[graft.functions.WordShingles]] expression — no token
+    * explode, no window sort, no distinct shuffle. (History: the transform/
     * array_distinct HOF paid ~15µs/eval interpreted lambdas; the
     * posexplode + window-lead + distinct reformulation escaped the lambdas
     * but shuffled and sorted the whole token stream per query — at 100 TB
     * the dominant cost of the near-dup family. The native expression
     * removes both.)
     */
-  private[ops] val shingles3Sql =
-    "word_shingles(filter(split(lower(text), ' '), t -> t != ''), 3)"
+  private[ops] def shingles(k: Int): Column = wordShingles(toks, k)
 
   /** (doc_id, sh: array<string>) distinct word-3-gram shingle sets —
     * one row-local projection, shuffle-free. */
-  private[ops] def shingleArrays(docs: DataFrame): DataFrame = {
-    graft.functions.WordShingles.register(docs.sparkSession)
-    docs.select(col("doc_id"), expr(shingles3Sql).as("sh"))
-  }
+  private[ops] def shingleArrays(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), shingles(3).as("sh"))
 
   /** (doc_id, pos, w) exploded token stream — row-level filter stays in
     * whole-stage codegen (unlike an array-lambda filter).
@@ -1903,11 +1901,10 @@ object TextOps {
   private val accentedAlphabet = "\u00e1\u00e9\u00ed\u00f1\u00f3\u00fa\u00e7"
 
   def q218UnicodeNormalize(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.UnicodeNorm.register(spark)
     Tables.documents(spark, dir)
       .withColumn("dirty", translate(lower(col("text")), "aeinouc", accentedAlphabet))
       .select(col("doc_id"),
-        md5(expr("unaccent(dirty)")).as("restored_hash"),
+        md5(unaccent(col("dirty"))).as("restored_hash"),
         (length(col("dirty")) - length(translate(col("dirty"), accentedAlphabet, "")))
           .as("n_accented"))
       .orderBy(col("doc_id"))
@@ -1939,7 +1936,6 @@ object TextOps {
   // the name vocabulary, both sides shuffle on the block key; the JW call
   // is a static per-pair evaluation with no state.
   def q235JaroWinklerMatch(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.JaroWinkler.register(spark)
     val p = Tables.part(spark, dir)
       .select(col("p_partkey"), col("p_name"), col("p_brand"),
         split(col("p_name"), " ").getItem(0).as("tok0"))
@@ -1947,7 +1943,7 @@ object TextOps {
     val b = p.toDF("b_key", "b_name", "brand", "tok0")
     a.join(b, Seq("brand", "tok0"))
       .filter(col("a_key") < col("b_key"))
-      .withColumn("jw", expr("jaro_winkler(a_name, b_name)"))
+      .withColumn("jw", jaroWinkler(col("a_name"), col("b_name")))
       .filter(col("jw") >= 0.85)
       .select(col("a_key"), col("b_key"), Num.pround(col("jw"), 6).as("jw"))
       .orderBy(col("a_key"), col("b_key"))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.GraftFunctions.{cosineSim, lshBands}
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
@@ -265,20 +266,14 @@ object VectorOps {
   // assignment is one linear pass, and the probe join is an equi-join on
   // cell id — |probed fraction| ≈ nprobe/ncells of the table scanned per
   // query instead of 100% for brute force.
-  def q45AnnIvf(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
+  def q45AnnIvf(spark: SparkSession, dir: String): DataFrame =
     annIvf(Tables.embeddings(spark, dir))
-  }
 
-  /** embeddings (vec_id, label, embedding) → IVF ANN top-10 per query:
-    * the q45 body, factored for spec-driven synthetic clusters (label
-    * doubles as the coarse cell seed). Caller must have registered
-    * cosine_sim. */
   /** Every vector scored against every IVF cell centroid (broadcast
     * codebook). The codebook is the exact per-label mean (same scaled-long
     * arithmetic as q41 — a raw double avg is order-dependent and could
     * flip cell assignments between runs). Shared by q45 (the search) and
-    * q424 (the nprobe planner). Caller must have registered cosine_sim.
+    * q424 (the nprobe planner).
     */
   private def ivfScored(base: DataFrame): DataFrame = {
     val codebook = base
@@ -290,9 +285,12 @@ object VectorOps {
       .agg(array_sort(collect_list(struct(col("pos"), col("c")))).as("pc"))
       .select(col("cell"), expr("transform(pc, x -> x.c)").as("cv"))
     base.crossJoin(broadcast(codebook))
-      .withColumn("csim", expr("cosine_sim(v, cv)"))
+      .withColumn("csim", cosineSim(col("v"), col("cv")))
   }
 
+  /** embeddings (vec_id, label, embedding) → IVF ANN top-10 per query:
+    * the q45 body, factored for spec-driven synthetic clusters (label
+    * doubles as the coarse cell seed). */
   def annIvf(embeddings: DataFrame): DataFrame = {
     val base = embeddings
       .select(col("vec_id"), col("label"), vd.as("v"))
@@ -310,7 +308,7 @@ object VectorOps {
     val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id").asc)
     assigned.join(broadcast(probes), Seq("cell"))
       .filter(col("vec_id") =!= col("qid"))
-      .withColumn("sim", expr("cosine_sim(v, qv)"))
+      .withColumn("sim", cosineSim(col("v"), col("qv")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 10)
       .select(col("qid"), col("rank"), col("vec_id"), Num.pround(col("sim"), 4).as("sim"))
@@ -382,7 +380,6 @@ object VectorOps {
   // (sim DESC, vec_id ASC) rankings — the q45 contract; both engines run
   // identical IEEE double dot products, so the rankings agree exactly.
   def q424NprobeCurve(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val base = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), vd.as("v"))
     val scored = ivfScored(base)
@@ -396,7 +393,7 @@ object VectorOps {
     val wG = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id").asc)
     val gt = base.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("qid"))
-      .withColumn("sim", expr("cosine_sim(v, qv)"))
+      .withColumn("sim", cosineSim(col("v"), col("qv")))
       .withColumn("rank", row_number().over(wG)).filter(col("rank") <= 10)
       .select(col("qid"), col("vec_id"))
       .localCheckpoint(false) // feeds the per-nprobe hit join AND the denominator
@@ -411,7 +408,7 @@ object VectorOps {
       .orderBy(col("sim").desc, col("vec_id").asc)
     val ivf = assigned.join(broadcast(pg), Seq("cell"))
       .filter(col("vec_id") =!= col("qid"))
-      .withColumn("sim", expr("cosine_sim(v, qv)"))
+      .withColumn("sim", cosineSim(col("v"), col("qv")))
       .withColumn("rank", row_number().over(wI)).filter(col("rank") <= 10)
       .select(col("nprobe"), col("qid"), col("vec_id"))
     val hits = ivf.join(gt, Seq("qid", "vec_id"))
@@ -497,11 +494,10 @@ object VectorOps {
   // q104 is verified against (VectorOpsSpec asserts q104 == q49 exactly).
   // The primary, scale-path implementation is q104CosineNearDupLsh below.
   def q49CosineNearDup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val base = Tables.embeddings(spark, dir).select(col("vec_id"), vd.as("v"))
     val b = base.select(col("vec_id").as("vec_id_b"), col("v").as("vb"))
     base.join(broadcast(b), col("vec_id") < col("vec_id_b"))
-      .withColumn("sim", expr("cosine_sim(v, vb)"))
+      .withColumn("sim", cosineSim(col("v"), col("vb")))
       .filter(col("sim") >= 0.4)
       .select(col("vec_id").as("id_a"), col("vec_id_b").as("id_b"),
         Num.pround(col("sim"), 4).as("sim"))
@@ -571,7 +567,7 @@ object VectorOps {
   }
 
   def q104CosineNearDupLsh(spark: SparkSession, dir: String): DataFrame =
-    cosineNearDup(spark, plantedTwinCorpus(spark, dir),
+    cosineNearDup(plantedTwinCorpus(spark, dir),
       threshold = ndRealThreshold, bands = ndRealBands,
       planesPerBand = ndRealPlanesPerBand)
 
@@ -603,20 +599,19 @@ object VectorOps {
     * ≈ 0.4% while cutting candidate fan-out by orders of magnitude vs the
     * (64, 4) worst-case setting q104 ships for its 0.4 catalog threshold.
     */
-  def cosineNearDup(spark: SparkSession, embeddings: DataFrame, threshold: Double,
+  def cosineNearDup(embeddings: DataFrame, threshold: Double,
                     bands: Int, planesPerBand: Int): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     // in-bucket exact check: cosine (codegen'd native expression) and the
     // threshold apply on the join output itself, so only true near-dup
     // pairs reach the dedup shuffle — a pair colliding in k bands costs k
     // cosine evals (k small on average), which is far cheaper than
     // shuffling every candidate pair's vectors through distinct + fetch
     // joins (measured 5× on the bench tables)
-    val keyed = bandKeyed(spark, embeddings, bands, planesPerBand)
+    val keyed = bandKeyed(embeddings, bands, planesPerBand)
     keyed.toDF("id_a", "va", "band", "bucket")
       .join(keyed.toDF("id_b", "vb", "band", "bucket"), Seq("band", "bucket"))
       .filter(col("id_a") < col("id_b"))
-      .withColumn("sim", expr("cosine_sim(va, vb)"))
+      .withColumn("sim", cosineSim(col("va"), col("vb")))
       .filter(col("sim") >= threshold)
       .groupBy(col("id_a"), col("id_b"))
       .agg(Num.pround(first(col("sim")), 4).as("sim"))
@@ -629,15 +624,11 @@ object VectorOps {
     * exploded to (band, bucket) keys, each row carrying its vector so the
     * exact check can run inside the band join.
     */
-  private def bandKeyed(spark: SparkSession, embeddings: DataFrame,
-                        bands: Int, planesPerBand: Int): DataFrame = {
-    val fn = s"lsh_bands_${bands}x$planesPerBand"
-    graft.functions.LshBands.register(spark, fn,
-      ndPlanesFor(bands, planesPerBand), planesPerBand)
+  private def bandKeyed(embeddings: DataFrame, bands: Int, planesPerBand: Int): DataFrame =
     embeddings.select(col("vec_id"), vd.as("v"))
-      .select(col("vec_id"), col("v"), posexplode(expr(s"$fn(v)")))
+      .select(col("vec_id"), col("v"),
+        posexplode(lshBands(col("v"), ndPlanesFor(bands, planesPerBand), planesPerBand)))
       .toDF("vec_id", "v", "band", "bucket")
-  }
 
   // --------------------------------------------------------------------------
   // q452 — INCREMENTAL VECTOR INDEX: q447's LSM index discipline applied
@@ -666,13 +657,10 @@ object VectorOps {
 
   /** (vec_id, embedding) → one (doc_id, band, band_sig) row per band:
     * the hyperplane-bucket signature family for [[BandIndex]] roots. */
-  private[graft] def vecSignatures(spark: SparkSession, vecs: DataFrame): DataFrame = {
-    val fn = s"lsh_bands_${ndRealBands}x$ndRealPlanesPerBand"
-    graft.functions.LshBands.register(spark, fn,
-      ndPlanesFor(ndRealBands, ndRealPlanesPerBand), ndRealPlanesPerBand)
-    vecs.select(col("vec_id"), posexplode(expr(s"$fn(embedding)")))
+  private[graft] def vecSignatures(vecs: DataFrame): DataFrame =
+    vecs.select(col("vec_id"), posexplode(lshBands(col("embedding"),
+        ndPlanesFor(ndRealBands, ndRealPlanesPerBand), ndRealPlanesPerBand)))
       .toDF("doc_id", "band", "band_sig")
-  }
 
   /** Exact-cosine verification for [[BandIndex.ingestSigs]] candidate
     * pairs, touching CANDIDATE ids only: vectors are semi-join-fetched
@@ -680,8 +668,7 @@ object VectorOps {
     * a fanout checkpoint, released by ingestSigs via the pairs plan), and
     * only the slim pair keys broadcast, never arrays. `corpus` must hold
     * (vec_id, embedding) for every id a candidate can name — callers
-    * union in-flight batches in (the streaming front door does). Callers
-    * register cosine_sim first. */
+    * union in-flight batches in (the streaming front door does). */
   private[graft] def cosineVerify(corpus: DataFrame, threshold: Double)(
       cand: DataFrame): DataFrame = {
     val needIds = cand.select(col("doc_id").as("vid"))
@@ -692,23 +679,22 @@ object VectorOps {
     broadcast(cand)
       .join(vecs.select(col("vec_id").as("doc_id"), col("embedding").as("va")), "doc_id")
       .join(vecs.select(col("vec_id").as("id_ex"), col("embedding").as("vb")), "id_ex")
-      .filter(expr("cosine_sim(va, vb)") >= threshold)
+      .filter(cosineSim(col("va"), col("vb")) >= threshold)
   }
 
   def q452IncrementalVectorIndex(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val corpus = plantedTwinCorpus(spark, dir).withColumn("batch", expr(viBatchExpr))
     val idxRoot = java.nio.file.Files.createTempDirectory("graft_vecidx").toString
     try {
       var st = BandIndex.seedSigs(spark, idxRoot,
-        vecSignatures(spark, corpus.filter(col("batch") === 0)))
+        vecSignatures(corpus.filter(col("batch") === 0)))
       // all three batch sizes in ONE pre-loop aggregate (the q447 fold)
       val incoming = corpus.filter(col("batch") >= 1).groupBy(col("batch"))
         .agg(count(lit(1)).as("n")).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
       val out = (1 to 3).map { b =>
         val r = BandIndex.ingestSigs(spark, idxRoot,
-          vecSignatures(spark, corpus.filter(col("batch") === b)),
+          vecSignatures(corpus.filter(col("batch") === b)),
           cosineVerify(corpus, ndRealThreshold), incoming(b.toLong), prev = Some(st))
         st = r.state
         (b.toLong, r.incoming, r.nearDup, r.incoming - r.nearDup, r.indexDocs)
@@ -765,10 +751,8 @@ object VectorOps {
   // (same-label rows compete for positive, different-label for negative),
   // and the per-anchor argmax is a map-side-partial hash aggregate — no
   // window sort, no second scan, nothing anchored on corpus size.
-  def q116ContrastivePairs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
+  def q116ContrastivePairs(spark: SparkSession, dir: String): DataFrame =
     contrastivePairs(Tables.embeddings(spark, dir), nAnchors = 20)
-  }
 
   /** embeddings(vec_id, label, embedding) → one (positive, negative)
     * triplet row per anchor. */
@@ -778,7 +762,7 @@ object VectorOps {
       .select(col("vec_id").as("aid"), col("label").as("alabel"), col("v").as("av"))
     base.crossJoin(broadcast(anchors))
       .filter(col("vec_id") =!= col("aid"))
-      .withColumn("sim", expr("cosine_sim(v, av)"))
+      .withColumn("sim", cosineSim(col("v"), col("av")))
       .groupBy(col("aid"))
       .agg(
         max(when(col("label") === col("alabel"),
@@ -916,7 +900,6 @@ object VectorOps {
     * stage.
     */
   private def sdAssigned(spark: SparkSession, emb: DataFrame): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val kRow = emb.agg(expr("greatest(8L, count(1) div 256)").as("k"))
     val seeds = emb.select(col("vec_id"), vd.as("cv"))
       .crossJoin(broadcast(kRow))
@@ -928,7 +911,7 @@ object VectorOps {
     emb.select(col("vec_id"), vd.as("v"))
       .repartition(emb.sparkSession.sparkContext.defaultParallelism, col("vec_id"))
       .crossJoin(broadcast(seeds))
-      .withColumn("sim", expr("cosine_sim(v, cv)"))
+      .withColumn("sim", cosineSim(col("v"), col("cv")))
       .groupBy(col("vec_id"))
       .agg(max(struct(col("sim"), (-col("cid")).as("nc"))).as("m"))
       .select(col("vec_id"), (-col("m.nc")).as("cluster"))
@@ -941,13 +924,13 @@ object VectorOps {
     // both sides of the bucket-collision self-join — unflattened, each
     // consumer re-runs the full assignment/banding pipeline
     val assigned = sdAssigned(spark, emb).localCheckpoint(false)
-    val keyed = bandKeyed(spark, emb, sdBands, sdPlanesPerBand)
+    val keyed = bandKeyed(emb, sdBands, sdPlanesPerBand)
       .join(assigned, Seq("vec_id"))
       .localCheckpoint(false)
     val removed = keyed.toDF("id_a", "va", "band", "bucket", "cluster")
       .join(keyed.toDF("id_b", "vb", "band", "bucket", "cluster"),
         Seq("cluster", "band", "bucket"))
-      .filter(col("id_a") < col("id_b") && expr("cosine_sim(va, vb)") >= 0.85)
+      .filter(col("id_a") < col("id_b") && cosineSim(col("va"), col("vb")) >= 0.85)
       .select(col("cluster"), col("id_b").as("vec_id")).distinct()
     assigned.join(removed, Seq("cluster", "vec_id"), "left_anti")
       .groupBy(col("cluster")).agg(count(lit(1)).as("n_kept"))
@@ -998,13 +981,12 @@ object VectorOps {
   // Scale: one broadcast-assignment pass, one hash agg to the k-row
   // cluster-stats table, broadcast back — two linear passes, no windows.
   def q212EmbeddingOutliers(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val seeds = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cid"), vd.as("cv"))
     val assigned = emb.select(col("vec_id"), vd.as("v"))
       .crossJoin(broadcast(seeds))
-      .withColumn("sim", expr("cosine_sim(v, cv)"))
+      .withColumn("sim", cosineSim(col("v"), col("cv")))
       .groupBy(col("vec_id"))
       .agg(max(struct(col("sim"), (-col("cid")).as("nc"))).as("m"))
       .select(col("vec_id"), (-col("m.nc")).as("cluster"), col("m.sim").as("sim"))
@@ -1214,13 +1196,12 @@ object VectorOps {
   // Scale: one broadcast-assignment pass + a window PARTITIONED by
   // cluster — never a global uncertainty sort.
   def q259Acquisition(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val seeds = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cid"), vd.as("cv"))
     val assigned = emb.select(col("vec_id"), vd.as("v"))
       .crossJoin(broadcast(seeds))
-      .withColumn("sim", expr("cosine_sim(v, cv)"))
+      .withColumn("sim", cosineSim(col("v"), col("cv")))
       .groupBy(col("vec_id"))
       .agg(max(struct(col("sim"), (-col("cid")).as("nc"))).as("m"))
       .select(col("vec_id"), (-col("m.nc")).as("cluster"))
@@ -1358,7 +1339,6 @@ object VectorOps {
   // Scale: one explode + hash agg for centroids (|labels|·dims rows),
   // one broadcast(|labels|) cross join — q212's assignment class.
   def q411LabelMargin(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val comp = emb.select(col("label"), posexplode(vd))
       .withColumnRenamed("pos", "dim").withColumnRenamed("col", "v")
@@ -1373,7 +1353,7 @@ object VectorOps {
       .select(col("label").as("clabel"), col("cv"))
     val assigned = emb.select(col("vec_id"), col("label"), vd.as("v"))
       .crossJoin(broadcast(cents))
-      .withColumn("sim", expr("cosine_sim(v, cv)"))
+      .withColumn("sim", cosineSim(col("v"), col("cv")))
       .localCheckpoint(false) // feeds the own-sim AND rival-sim passes
     val own = assigned.filter(col("label") === col("clabel"))
       .select(col("vec_id"), col("label"), col("sim").as("own_sim"))
@@ -1458,7 +1438,6 @@ object VectorOps {
   // produce (q104's argument), tie-broken by vec_id; the output is an
   // integer overlap count.
   def q280Int8Quant(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     // lazy checkpoints (§8.22): the interpreted HOF folds (normalize,
     // quantize) are the per-row cost here, and the broadcast subtrees
     // (amax, qq, qvec) plus both scoring passes each re-ran them from the
@@ -1493,7 +1472,7 @@ object VectorOps {
       .select(col("vec_id").as("qid"), col("v").as("qvec"))
     val ex = emb.crossJoin(broadcast(qvec))
       .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"), expr("cosine_sim(v, qvec)").as("score"))
+      .select(col("qid"), col("vec_id"), cosineSim(col("v"), col("qvec")).as("score"))
     def top10(df: DataFrame): DataFrame = {
       val w1 = Window.partitionBy(col("qid"), pmod(col("vec_id"), lit(32)))
         .orderBy(col("score").desc, col("vec_id"))

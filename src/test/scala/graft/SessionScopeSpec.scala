@@ -6,10 +6,13 @@ import scala.jdk.CollectionConverters._
 
 import graft.ops.Checkpoints
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 
 /** `GraftSession.withConf` plans a build on a reused child session: the
-  * caller's conf, temp views and streaming query names never change, two
+  * caller's conf, temp views, temp functions and streaming query names
+  * never change, two
   * callers of one session cannot see each other's scope, and a repeated
   * scoped build reuses the classes its first call generated.
   */
@@ -17,20 +20,56 @@ class SessionScopeSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def temporaryViews: Set[String] =
-    spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+  private def temporaryViews(s: SparkSession): Set[String] =
+    s.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+
+  /** Each temporary function, with the class its definition names: a
+    * name that was defined again reads as changed. */
+  private def temporaryFunctions(s: SparkSession): Map[String, String] = {
+    val catalog = s.sessionState.catalog
+    catalog.listTemporaryFunctions()
+      .map(f => f.funcName -> catalog.lookupFunctionInfo(f).getClassName).toMap
+  }
 
   /** Order-free digest of a query's rows. */
-  private def digest(q: String): String =
-    SparkEntry.queries(q)(spark, dir).collect().map(_.toString).sorted.mkString("\n")
+  private def digest(q: String, s: SparkSession = spark): String =
+    SparkEntry.queries(q)(s, dir).collect().map(_.toString).sorted.mkString("\n")
 
-  test("q122 leaves the caller's conf and temp views as they were") {
-    val conf = spark.conf.getAll
-    val views = temporaryViews
-    assert(digest("q122_file_stream").nonEmpty)
-    assert(!spark.catalog.tableExists("graft_q122_result"))
-    assert(temporaryViews === views)
-    assert(spark.conf.getAll === conf)
+  /** q122 names a streaming result view; q23, q25, q147 and q146 read SQL
+    * temp views; the rest build graft's native expressions (one operator
+    * from each file that builds them for a catalog operator). */
+  Seq("q122_file_stream", "q23_grouping_sets", "q25_subqueries", "q147_lateral_topk",
+    "q146_recursive_cte", "q37_fingerprint", "q452_incremental_vector_index",
+    "q218_unicode_normalize", "q235_jaro_winkler_match", "q247_geohash",
+    "q428_lsh_bucket_forecast", "q106_decontaminate", "q44_cosine_topk_native",
+    "q203_curation_funnel", "q427_source_type_overlap").foreach { q =>
+    val id = q.takeWhile(_ != '_')
+    test(s"$id leaves the caller's conf and temp views as they were") {
+      // a fresh session: the shared one may already hold the names
+      val s = spark.newSession()
+      val conf = s.conf.getAll
+      val views = temporaryViews(s)
+      val functions = temporaryFunctions(s)
+      assert(digest(q, s).nonEmpty)
+      assert(!s.catalog.tableExists(s"graft_${id}_result"))
+      assert(temporaryViews(s) === views)
+      assert(temporaryFunctions(s) === functions)
+      assert(s.conf.getAll === conf)
+      Checkpoints.releaseAll(s)
+    }
+  }
+
+  test("operators build graft's expressions on a session without its SQL names") {
+    val s = spark.newSession()
+    val registry = s.sessionState.functionRegistry
+    Seq("cosine_sim", "unaccent", "jaro_winkler", "geohash_q").foreach { f =>
+      assert(registry.dropFunction(FunctionIdentifier(f)), f)
+    }
+    Seq("q45_ann_ivf", "q104_cosine_neardup_lsh", "q218_unicode_normalize",
+      "q235_jaro_winkler_match", "q247_geohash", "q452_incremental_vector_index").foreach { q =>
+      assert(digest(q, s) === digest(q), q)
+    }
+    Checkpoints.releaseAll(s)
   }
 
   test("a withConf body plans with the scope's conf while the caller keeps its own") {

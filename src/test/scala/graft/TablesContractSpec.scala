@@ -201,7 +201,6 @@ class TablesContractSpec extends SparkSpec {
           Row(1L, (0 until 64).map(i => (if (i % 2 == 0) 0.5f else -0.25f)), 2)),
         Tables.embeddings, None,
         d => {
-          graft.functions.CosineSimilarity.register(d.sparkSession)
           val a = d.filter(col("vec_id") === 0)
             .select(expr("transform(embedding, x -> cast(x as double))").as("va"))
           val b = d.filter(col("vec_id") === 1)

@@ -122,7 +122,6 @@ class IncrementalIndexSpec extends SparkSpec {
     // the LSH candidate path + exact-cosine verify must reproduce what a
     // brute-force per-batch sweep finds — same recall argument as q104's
     // oracle, checked here in-engine over the full sf0.001 corpus
-    graft.functions.CosineSimilarity.register(spark)
     val got = VectorOps.q452IncrementalVectorIndex(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(4)))
     val corpus = VectorOps.plantedTwinCorpus(spark, dir)
@@ -157,8 +156,8 @@ class IncrementalIndexSpec extends SparkSpec {
       .withColumn("batch", expr(VectorOps.viBatchExpr))
     val noPairs = (cand: org.apache.spark.sql.DataFrame) => cand.filter(lit(false))
     val st0 = BandIndex.seedSigs(spark, root,
-      VectorOps.vecSignatures(spark, corpus.filter(col("batch") === 0)))
-    val sig1 = VectorOps.vecSignatures(spark, corpus.filter(col("batch") === 1))
+      VectorOps.vecSignatures(corpus.filter(col("batch") === 0)))
+    val sig1 = VectorOps.vecSignatures(corpus.filter(col("batch") === 1))
     val r1 = BandIndex.ingestSigs(spark, root, sig1, noPairs, incoming = 0L, prev = Some(st0))
     val live1 = BandIndex.read(spark, root)
       .select("doc_id", "band", "band_sig").localCheckpoint(true)
@@ -184,8 +183,8 @@ class IncrementalIndexSpec extends SparkSpec {
       .withColumn("batch", expr(VectorOps.viBatchExpr))
     val noPairs = (cand: org.apache.spark.sql.DataFrame) => cand.filter(lit(false))
     val st0 = BandIndex.seedSigs(spark, root,
-      VectorOps.vecSignatures(spark, corpus.filter(col("batch") === 0)))
-    val sig1 = VectorOps.vecSignatures(spark, corpus.filter(col("batch") === 1))
+      VectorOps.vecSignatures(corpus.filter(col("batch") === 0)))
+    val sig1 = VectorOps.vecSignatures(corpus.filter(col("batch") === 1))
     BandIndex.ingestSigs(spark, root, sig1, noPairs, incoming = 0L, prev = Some(st0))
     val rowsAfter1 = spark.read.parquet(s"$root/rows").count()
     val liveAfter1 = BandIndex.read(spark, root)
@@ -206,7 +205,6 @@ class IncrementalIndexSpec extends SparkSpec {
     // the call must be over when the exception arrives, and no write of
     // the failed generation may land: a leaked ids/ append makes the
     // retry see its own batch as present (novel 0, census too low)
-    graft.functions.CosineSimilarity.register(spark)
     val corpus = VectorOps.plantedTwinCorpus(spark, dir)
       .withColumn("batch", expr(VectorOps.viBatchExpr)).localCheckpoint(true)
     val verify = VectorOps.cosineVerify(corpus, 0.9) _
@@ -215,9 +213,9 @@ class IncrementalIndexSpec extends SparkSpec {
     })
     val failing = (cand: org.apache.spark.sql.DataFrame) =>
       cand.withColumn("doc_id", boom(col("doc_id")))
-    val sig0 = VectorOps.vecSignatures(spark, corpus.filter(col("batch") === 0))
+    val sig0 = VectorOps.vecSignatures(corpus.filter(col("batch") === 0))
     // batches 0 and 1: a re-ingest, so the tombstone path runs as well
-    val mixed = VectorOps.vecSignatures(spark, corpus.filter(col("batch") <= 1))
+    val mixed = VectorOps.vecSignatures(corpus.filter(col("batch") <= 1))
     val root = java.nio.file.Files.createTempDirectory("graft_idx_failed").toString
     val ref = java.nio.file.Files.createTempDirectory("graft_idx_clean").toString
     val st0 = BandIndex.seedSigs(spark, root, sig0)
@@ -260,13 +258,12 @@ class IncrementalIndexSpec extends SparkSpec {
     // write part-way (KillFs), then may plant what a kill inside a job
     // commit leaves: a part file still under _temporary, missing from
     // its ver=<n> directory
-    graft.functions.CosineSimilarity.register(spark)
     spark.sparkContext.hadoopConfiguration.set("fs.killfs.impl", classOf[KillFs].getName)
     val corpus = VectorOps.plantedTwinCorpus(spark, dir)
       .withColumn("batch", expr(VectorOps.viBatchExpr)).localCheckpoint(true)
     val verify = VectorOps.cosineVerify(corpus, 0.9) _
-    val sig0 = VectorOps.vecSignatures(spark, corpus.filter(col("batch") === 0))
-    val mixed = VectorOps.vecSignatures(spark, corpus.filter(col("batch") <= 1))
+    val sig0 = VectorOps.vecSignatures(corpus.filter(col("batch") === 0))
+    val mixed = VectorOps.vecSignatures(corpus.filter(col("batch") <= 1))
     val ref = java.nio.file.Files.createTempDirectory("graft_idx_clean").toString
     val refSt0 = BandIndex.seedSigs(spark, ref, sig0)
     val seeded = BandIndex.read(spark, ref).localCheckpoint(true)
@@ -324,8 +321,8 @@ class IncrementalIndexSpec extends SparkSpec {
       .withColumn("batch", expr(VectorOps.viBatchExpr))
     val noPairs = (cand: org.apache.spark.sql.DataFrame) => cand.filter(lit(false))
     val st0 = BandIndex.seedSigs(spark, root,
-      VectorOps.vecSignatures(spark, corpus.filter(col("batch") === 0)))
-    val sig1 = VectorOps.vecSignatures(spark, corpus.filter(col("batch") === 1))
+      VectorOps.vecSignatures(corpus.filter(col("batch") === 0)))
+    val sig1 = VectorOps.vecSignatures(corpus.filter(col("batch") === 1))
     // two ingests, the second re-ingesting the first: tombstones + gen-2 meta exist
     val r1 = BandIndex.ingestSigs(spark, root, sig1, noPairs, incoming = 0L, prev = Some(st0))
     BandIndex.ingestSigs(spark, root, sig1, noPairs, incoming = 0L, prev = Some(r1.state))
@@ -336,7 +333,7 @@ class IncrementalIndexSpec extends SparkSpec {
       .foreach(f => java.nio.file.Files.copy(f.toPath, new java.io.File(stale, f.getName).toPath))
     // re-seed the same root from batch 0 only
     val reseeded = BandIndex.seedSigs(spark, root,
-      VectorOps.vecSignatures(spark, corpus.filter(col("batch") === 0)))
+      VectorOps.vecSignatures(corpus.filter(col("batch") === 0)))
     assert(reseeded.gen == 0L)
     assert(BandIndex.readState(spark, root).gen == 0L,
       "stale higher-gen meta file still wins readState after re-seed")

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.functions.GraftFunctions.wordShingles
 import org.apache.spark.sql.functions._
 
 /** Non-degeneracy guard for q32's 32-slice md5 minhash family: every
@@ -21,10 +22,8 @@ class MinhashSignatureSpec extends SparkSpec {
       (2L, "yet another text with its own vocabulary of streaming watermarks here"),
       (3L, "fourth sample mentioning parquet footers predicate pushdown and scans"))
       .toDF("doc_id", "text")
-    graft.functions.WordShingles.register(spark)
-    val sig = TextOps.minhashSignatures(
-      docs.select(col("doc_id"), expr(
-        "word_shingles(filter(split(lower(text), ' '), t -> t != ''), 3)").as("sh")))
+    val sig = TextOps.minhashSignatures(docs.select(col("doc_id"),
+      wordShingles(TextOps.toks, 3).as("sh")))
     val checks = (0 until 32).flatMap { i =>
       Seq(countDistinct(col(s"m$i")).as(s"d$i"),
         count_if(col(s"m$i").isNull).as(s"n$i"),

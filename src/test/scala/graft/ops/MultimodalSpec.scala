@@ -106,7 +106,6 @@ class MultimodalSpec extends SparkSpec {
     assert(f1 === f2)
     // plugs into the existing vector machinery unchanged: cosine of a
     // feature vector with itself is 1
-    graft.functions.CosineSimilarity.register(spark)
     val sims = Multimodal.extractFeatures(media, dim = 8)
       .select(expr("cosine_sim(cast(features as array<double>), cast(features as array<double>))").as("s"))
       .collect().map(_.getDouble(0))

@@ -18,7 +18,7 @@ class PipelineOpsSpec extends SparkSpec {
       (2L, "one two three nine ten eleven twelve"),
       (3L, "p q r s t u v w")
     ).toDF("doc_id", "text")
-    val out = PipelineOps.decontaminate(docs, spark).collect()
+    val out = PipelineOps.decontaminate(docs).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         ((r.getAs[Long]("n_hit"), r.getAs[Boolean]("contaminated")))).toMap
     assert(out(1L) === ((1L, true)))
@@ -439,7 +439,7 @@ class PipelineOpsSpec extends SparkSpec {
       (i.toLong, Array.tabulate(64)(d => if (d % 2 == i % 2) 1.0f else 0.1f))
     }.toDF("vec_id", "embedding")
     def planNodes(iters: Int): Int =
-      PipelineOps.kmeans(emb, spark, k = 2, iters = iters)
+      PipelineOps.kmeans(emb, k = 2, iters = iters)
         .queryExecution.optimizedPlan.collect { case p => p }.size
     // without the per-iteration localCheckpoint the iter-4 plan re-embeds
     // every earlier iteration's assignment+update lineage
@@ -464,7 +464,7 @@ class PipelineOpsSpec extends SparkSpec {
       (id, v, c)
     }
     val emb = rows.toDF("vec_id", "embedding", "label")
-    val out = PipelineOps.kmeans(emb, spark, k = 8, iters = 2).collect()
+    val out = PipelineOps.kmeans(emb, k = 8, iters = 2).collect()
     assert(out.length === 200)
     // every planted cluster maps to exactly one k-means cluster and the
     // assignment is pure (clusters are separated by ~90° in cosine space)
@@ -475,7 +475,7 @@ class PipelineOpsSpec extends SparkSpec {
       assert(rs.map(_.getAs[Int]("cluster")).distinct.length === 1)
     }
     // mean assignment similarity after an update beats the raw-seed init
-    val sim0 = PipelineOps.kmeans(emb, spark, k = 8, iters = 0).collect()
+    val sim0 = PipelineOps.kmeans(emb, k = 8, iters = 0).collect()
       .map(_.getAs[Double]("sim")).sum / 200
     val sim2 = out.map(_.getAs[Double]("sim")).sum / 200
     assert(sim2 >= sim0 - 1e-9, s"iterating degraded fit: $sim0 -> $sim2")

@@ -384,23 +384,22 @@ class StreamingSpec extends SparkSpec {
     // content-identical live index.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.CosineSimilarity.register(spark)
     val corpus = VectorOps.plantedTwinCorpus(spark, "/root/testdata/sf0.001")
       .withColumn("batch", expr(VectorOps.viBatchExpr))
       .localCheckpoint(true)
     val rootBatch = java.nio.file.Files.createTempDirectory("graft_vidx_b").toString
     val rootStream = java.nio.file.Files.createTempDirectory("graft_vidx_s").toString
     var st = BandIndex.seedSigs(spark, rootBatch,
-      VectorOps.vecSignatures(spark, corpus.filter(col("batch") === 0)))
+      VectorOps.vecSignatures(corpus.filter(col("batch") === 0)))
     val batchResults = (1 to 3).map { b =>
       val part = corpus.filter(col("batch") === b)
       val r = BandIndex.ingestSigs(spark, rootBatch,
-        VectorOps.vecSignatures(spark, part),
+        VectorOps.vecSignatures(part),
         VectorOps.cosineVerify(corpus, 0.9), incoming = part.count(), prev = Some(st))
       st = r.state; r
     }
     BandIndex.seedSigs(spark, rootStream,
-      VectorOps.vecSignatures(spark, corpus.filter(col("batch") === 0)))
+      VectorOps.vecSignatures(corpus.filter(col("batch") === 0)))
     val ingestor = new VecIndexStreamIngestor(spark, rootStream,
       corpus.select("vec_id", "embedding"))
     val stream = MemoryStream[VecRow]

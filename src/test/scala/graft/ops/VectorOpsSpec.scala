@@ -69,7 +69,6 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("ANN recall is high on planted clusters (LSH and IVF vs exact)") {
-    graft.functions.CosineSimilarity.register(spark)
     val emb = clusteredEmbeddings.cache()
     val exact = VectorOps.cosineTopk(emb).collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("vec_id"))).toSet
@@ -101,7 +100,6 @@ class VectorOpsSpec extends SparkSpec {
     // O(n²) baseline twin over the SAME planted-twin corpus: same pairs,
     // same rounded sims — full recall by construction of the band
     // parameters (16 bands × 8 planes at the 0.9 threshold)
-    graft.functions.CosineSimilarity.register(spark)
     val corpus = VectorOps.plantedTwinCorpus(spark, dir)
     val b = corpus.select(col("vec_id").as("vec_id_b"), col("embedding").as("vb"))
     val exact = corpus.join(broadcast(b), col("vec_id") < col("vec_id_b"))
@@ -123,7 +121,7 @@ class VectorOpsSpec extends SparkSpec {
     // precedent); equality vs the exact all-pairs baseline is pinned here.
     val exact = VectorOps.q49CosineNearDup(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val lsh = VectorOps.cosineNearDup(spark,
+    val lsh = VectorOps.cosineNearDup(
         spark.read.parquet(s"$dir/embeddings.parquet"),
         threshold = 0.4, bands = VectorOps.ndBands,
         planesPerBand = VectorOps.ndPlanesPerBand)
@@ -149,7 +147,6 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("contrastive pairs mine in-cluster positives and out-of-cluster hard negatives") {
-    graft.functions.CosineSimilarity.register(spark)
     val emb = clusteredEmbeddings // labels = planted clusters, ~0.99 in / ~0 cross
     val rows = VectorOps.contrastivePairs(emb, nAnchors = 10).collect()
     assert(rows.nonEmpty)
